@@ -1,9 +1,12 @@
 """SparkSession construction.
 
 Local mode is a single JVM with N executor threads; on a real cluster the
-same config block applies minus ``driver.memory`` sizing. Everything here is
-plain public Spark configuration. UTC everywhere so pandas / Spark / DuckDB
-agree on timestamps.
+same config block applies minus ``driver.memory`` sizing. That sizing
+defaults to min(48g, 60% of the memory the process may use — physical RAM,
+or the cgroup memory limit where one is set and lower), and
+``$TSENGINE_DRIVER_MEM`` overrides it (see :func:`driver_memory`).
+Everything here is plain public Spark configuration. UTC everywhere so
+pandas / Spark / DuckDB agree on timestamps.
 """
 
 from __future__ import annotations
@@ -13,6 +16,78 @@ import os
 from pyspark.sql import SparkSession
 
 from tsengine.env_tuning import setdefault_simd
+
+# upper bound of the default heap: at ~35M turns the wide-rollup hash agg +
+# chunked windows cross 24g's execution-memory threshold and spill, and 8
+# concurrent spilling tasks on virtio disk ran 3x slower (measured 489s ->
+# 161s for the same job at 48g)
+DRIVER_MEM_CAP_MB = 48 * 1024
+# share of usable memory the default heap may take; the rest is headroom
+# for what lives outside the heap (see driver_memory)
+DRIVER_MEM_FRACTION = 0.6
+
+
+def usable_memory_bytes() -> int | None:
+    """Memory this process may use: physical RAM, lowered to the cgroup
+    memory limit (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``, at the
+    cgroup mount root or under this process's own cgroup path) where one is
+    set. None where physical RAM cannot be read."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return None
+    if total <= 0:
+        return None
+    paths = ["/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"]
+    try:
+        with open("/proc/self/cgroup") as f:
+            for line in f.read().splitlines():
+                _, controllers, path = line.split(":", 2)
+                if not controllers:
+                    paths.append(f"/sys/fs/cgroup{path}/memory.max")
+                elif "memory" in controllers.split(","):
+                    paths.append(f"/sys/fs/cgroup/memory{path}/memory.limit_in_bytes")
+    except (OSError, ValueError):
+        pass
+    for p in paths:
+        try:
+            with open(p) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # v2 writes "max" when no limit is set
+            total = min(total, int(raw))
+    return total
+
+
+def default_driver_memory(mem_bytes: int | None) -> str:
+    """Default ``spark.driver.memory`` for a process that may use
+    ``mem_bytes``: min(48g, ``DRIVER_MEM_FRACTION`` of it), in whole
+    megabytes. ``None`` (memory size unreadable) gives 48g."""
+    cap = f"{DRIVER_MEM_CAP_MB // 1024}g"
+    if mem_bytes is None:
+        return cap
+    mb = int(mem_bytes * DRIVER_MEM_FRACTION) // (1024 * 1024)
+    return cap if mb >= DRIVER_MEM_CAP_MB else f"{mb}m"
+
+
+def driver_memory() -> str:
+    """Driver heap (``-Xmx``) for a new session: ``$TSENGINE_DRIVER_MEM``
+    when set and non-empty, else :func:`default_driver_memory` of
+    :func:`usable_memory_bytes`.
+
+    The heap is lazily allocated, so it is sized for the worst stage, not
+    the average — up to the 48g that the 35M-turn rollup needed to stay out
+    of spill. But G1 grows the heap toward its ceiling rather than
+    collecting, so a ceiling the machine cannot back ends in a kernel OOM
+    kill of the JVM (a 48g heap on a 16 GB host was killed at ~15 GB RSS).
+    The 40% left outside the heap covers the JVM's own off-heap memory
+    (metaspace, thread stacks, direct buffers — which default to a cap of
+    -Xmx too), the N Python workers, and the driver's Python process.
+    """
+    return os.environ.get("TSENGINE_DRIVER_MEM") or default_driver_memory(
+        usable_memory_bytes()
+    )
 
 
 def get_spark(
@@ -74,12 +149,9 @@ def get_spark(
             "spark.hadoop.parquet.enable.dictionary",
             os.environ.get("TSENGINE_PARQUET_DICT", "false"),
         )
-        # heap is lazily allocated — size for the worst stage, not the
-        # average: at ~35M turns the wide-rollup hash agg + chunked windows
-        # cross 24g's execution-memory threshold and spill, and 8 concurrent
-        # spilling tasks on virtio disk ran 3x slower (measured 489s -> 161s
-        # for the same job at 48g)
-        .config("spark.driver.memory", os.environ.get("TSENGINE_DRIVER_MEM", "48g"))
+        # heap: min(48g, 60% of usable memory), or $TSENGINE_DRIVER_MEM —
+        # see driver_memory() for why both bounds exist
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # committer v2: task outputs move to the final location at task
