@@ -137,6 +137,15 @@ def test_encode_many_rejects_non_tiling():
         codec.dodblk_encode_many(np.zeros(4, dtype=np.int64), [1], [4])
 
 
+def test_encode_many_rejects_empty_slices():
+    # contiguous and tiling, but the middle slice is empty (or reversed)
+    for starts, ends in (([0, 2, 2], [2, 2, 4]), ([0, 3, 2], [3, 2, 4])):
+        with pytest.raises(ValueError, match="non-empty"):
+            codec.xorblk_encode_many(np.zeros(4), starts, ends)
+        with pytest.raises(ValueError, match="non-empty"):
+            codec.dodblk_encode_many(np.zeros(4, dtype=np.int64), starts, ends)
+
+
 def test_decode_many_bit_identical():
     rng = np.random.default_rng(91)
     for trial in range(100):

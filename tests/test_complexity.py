@@ -796,6 +796,18 @@ def test_flow_pagerank_sums_to_one_and_ranks_sink(spark):
     assert got["end"] > got["a"] and got["end"] > got["b"]
 
 
+@pytest.mark.parametrize("n_iter", [0, -3])
+def test_flow_pagerank_no_iterations_is_uniform(spark, n_iter):
+    from tsengine import temporal
+
+    # no power steps: every state keeps the uniform start rank 1/|states|
+    seqs = {"c1": ["a", "b", "c"], "c2": ["a", "c", "c"]}
+    rows = temporal.flow_pagerank(_evstream(spark, seqs), n_iter=n_iter).collect()
+    assert {r.state: r.pagerank for r in rows} == pytest.approx(
+        {s: round(1 / 3, 6) for s in "abc"})
+    assert {r.n_iter for r in rows} == {n_iter}
+
+
 # ---------------------------------------------------------------------------
 # forecast metrics / conformal interval (temporal)
 # ---------------------------------------------------------------------------

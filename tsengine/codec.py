@@ -177,6 +177,10 @@ def _check_tiling(arr_len: int, starts: np.ndarray, ends: np.ndarray) -> None:
         len(starts) > 1 and not np.array_equal(starts[1:], ends[:-1])
     ):
         raise ValueError("slices must be contiguous, ascending, and tile the array")
+    # an empty slice would make reduceat-based readers (chunks) pick up the
+    # next slice's first value instead of nothing
+    if np.any(ends <= starts):
+        raise ValueError("slices must be non-empty")
 
 
 def _pack_varwidth_blocks(

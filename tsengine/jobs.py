@@ -15,17 +15,23 @@ The flagship job reproduces the reference's E1/E3 lifecycle shape
     with per-unit lineage rows → resumable (lineage.py)
 
 Work units are conv_id hash buckets (≙ Iceberg ``bucket(B, conv_id)``
-partitions). Each unit is an independent sub-job: at cluster scale units
-run as separate applications over disjoint partition predicates; here they
-run sequentially to exercise the checkpoint/resume path.
+partitions), and every sink is partitioned by unit (``<table>/unit=k/``).
+The transcripts are scanned and featurized ONCE per run; each stage then
+writes all of its pending units in one Spark job per table, with dynamic
+partition overwrite replacing exactly the pending units' directories.
+Resume stays per (stage, unit): a unit is recorded done only after the
+job that wrote it has committed. At cluster scale the same units can
+also run as separate applications over disjoint partition predicates.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from functools import partial
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tsengine import chunks as chunks_mod
@@ -42,6 +48,92 @@ def bucket_expr(n_buckets: int):
     return F.crc32(F.col("conv_id")) % n_buckets
 
 
+def _unit_name(k: int) -> str:
+    return f"bucket={k}"
+
+
+def _write_units(
+    df: DataFrame, path: str, units: list[int], weight=None
+) -> dict[int, int]:
+    """Write ``df`` partitioned by its ``unit`` column, replacing only the
+    ``unit=k`` directories it writes rows to (dynamic partition
+    overwrite), and return Σ``weight`` (default: rows) per unit of
+    ``units``, observed during the write instead of re-read after it."""
+    weight = F.lit(1) if weight is None else weight
+    obs = Observation()
+    df.observe(
+        obs,
+        *[
+            F.sum(F.when(F.col("unit") == k, weight).otherwise(0)).alias(f"u{k}")
+            for k in units
+        ],
+    ).write.mode("overwrite").partitionBy("unit").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
+    got = obs.get
+    return {k: int(got.get(f"u{k}") or 0) for k in units}
+
+
+def _drop_units(paths: list[str], units: list[int]) -> None:
+    """Remove ``unit=k`` directories that a dynamic overwrite left alone
+    because unit k now yields no rows (its old rows would otherwise stay)."""
+    for p in paths:
+        for k in units:
+            shutil.rmtree(f"{p}/unit={k}", ignore_errors=True)
+
+
+def _counts(rows: dict[int, int]) -> dict[str, tuple[None, int]]:
+    """Per-unit rows_out → ``lineage.run_unit``'s (rows_in, rows_out)."""
+    return {_unit_name(k): (None, n) for k, n in rows.items()}
+
+
+def _tier_stage(spark, feats, units, *, out_root, paths) -> dict:
+    """1m wide rollup of every unit in one write, then the publish cascade;
+    rows_out per unit is its long tier_1m row count."""
+    mets = features.DEFAULT_METRICS
+    # wide-path rollup AND cascade: the only raw-volume shuffle carries one
+    # row per (conv, minute) — not per metric — and the coarser tiers
+    # re-aggregate the wide scratch, so no shuffle in the whole cascade
+    # carries a string metric key. Public long tiers are post-agg unpivots
+    # of the scratch; a wide row publishes one long row per metric with data.
+    g1m = rollup.rollup_from_raw_wide_stats(feats, mets, "1m", by=("unit",))
+    n_long = sum((F.col(f"{m}__cnt") > 0).cast("long") for m in mets)
+    rows = _write_units(g1m, paths["1m_wide"], units, weight=n_long)
+    live = [k for k in units if rows[k]]
+    _drop_units(
+        [paths[t] for t in ("1m_wide", "1h_wide", *rollup.TIER_ORDER)],
+        [k for k in units if not rows[k]],
+    )
+    if live:
+        # overlapped publish: each tier's long-form unpivot write runs
+        # concurrently with the next cascade level — the coarse-tier tail
+        # is two overlap groups, not five sequential small jobs
+        rollup.publish_cascade_wide(spark, out_root, mets, units=live)
+    return _counts(rows)
+
+
+def _chunk_stage(
+    spark, feats, units, *, paths, n_buckets, gapfill_freq, chunk_span
+) -> dict:
+    """Gap-filled 1m grid and its chunk blobs for every unit, one write
+    each; rows_out per unit is its chunk row count."""
+    long = features.to_long(feats, GAPFILL_METRICS)
+    filled = gapfill.gapfill_sql(long, freq=gapfill_freq, method="linear")
+    n_filled = _write_units(
+        filled.withColumn("unit", bucket_expr(n_buckets)), paths["filled"], units
+    )
+    live = [k for k in units if n_filled[k]]
+    _drop_units([paths["filled"], paths["chunks"]], [k for k in units if not n_filled[k]])
+    rows = dict.fromkeys(units, 0)
+    if live:
+        filled_r = spark.read.parquet(paths["filled"]).where(F.col("unit").isin(live))
+        ch = chunks_mod.encode_chunks(filled_r, chunk_span=chunk_span)
+        rows |= _write_units(
+            ch.withColumn("unit", bucket_expr(n_buckets)), paths["chunks"], live
+        )
+    return _counts(rows)
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -55,7 +147,11 @@ def run_pipeline(
     resume: bool = True,
     fail_after_units: int | None = None,
 ) -> dict[str, str]:
-    """Run (or resume) the full pipeline; returns output table paths."""
+    """Run (or resume) the full pipeline; returns output table paths.
+
+    ``fail_after_units`` injects a failure for resume tests: the stages
+    (tier_cascade, then chunks) run only their first pending units until
+    that many have run in total, then ``PipelineFailure`` is raised."""
     log = lineage.LineageLog(spark, out_root)
     paths = {
         t: os.path.join(out_root, f"tier_{t}") for t in rollup.TIER_ORDER
@@ -66,61 +162,55 @@ def run_pipeline(
         "filled": os.path.join(out_root, "filled_1m"),
     }
 
-    done = {
-        stage: (log.completed_units(job_id, stage, fingerprint) if resume else set())
-        for stage in ("tier_cascade", "chunks")
+    # stage -> work(spark, feats, units), run in this order
+    stages = {
+        "tier_cascade": partial(_tier_stage, out_root=out_root, paths=paths),
+        "chunks": partial(
+            _chunk_stage, paths=paths, n_buckets=n_buckets,
+            gapfill_freq=gapfill_freq, chunk_span=chunk_span,
+        ),
     }
+    pending: dict[str, list[int]] = {}
+    budget, truncated = fail_after_units, False
+    for stage in stages:
+        done = log.completed_units(job_id, stage, fingerprint) if resume else set()
+        units = [k for k in range(n_buckets) if _unit_name(k) not in done]
+        if budget is not None:
+            truncated |= len(units) > budget
+            units = units[:budget]
+            budget -= len(units)
+        pending[stage] = units
 
-    executed = 0
-    for k in range(n_buckets):
-        unit = f"bucket={k}"
-        part = transcripts.where(bucket_expr(n_buckets) == k)
-
-        if unit not in done["tier_cascade"]:
-            if fail_after_units is not None and executed >= fail_after_units:
-                raise PipelineFailure(f"injected failure before {unit}")
-
-            def tier_work(part=part, k=k):
-                mets = features.DEFAULT_METRICS
-                wide = features.derive_features_chunked(part)
-                # wide-path rollup AND cascade: the only raw-volume shuffle
-                # carries one row per (conv, minute) — not per metric — and
-                # the coarser tiers re-aggregate the wide scratch, so no
-                # shuffle in the whole cascade carries a string metric key.
-                # Public long tiers are post-agg unpivots of the scratch.
-                g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
-                g1m.write.mode("overwrite").parquet(f"{paths['1m_wide']}/unit={k}")
-                # overlapped publish: each tier's long-form unpivot write
-                # runs concurrently with the next cascade level — the
-                # coarse-tier tail is two overlap groups, not five
-                # sequential small jobs (rollup.publish_cascade_wide)
-                rollup.publish_cascade_wide(
-                    spark, out_root, mets, suffix=f"/unit={k}"
+    wanted = sorted(set().union(*pending.values()))
+    if wanted:
+        # ONE scan and ONE feature derivation feed both stages. The narrow
+        # select lets column pruning keep text out of the window exchange
+        # (features._with_signals) and out of the persisted frame.
+        unit = bucket_expr(n_buckets)
+        src = transcripts
+        if len(wanted) < n_buckets:
+            src = src.where(unit.isin(wanted))
+        feats = features.derive_features_chunked(src).select(
+            "conv_id", "ts", unit.alias("unit"), *features.DEFAULT_METRICS
+        )
+        shared = all(pending.values())
+        if shared:
+            feats = feats.persist()
+        try:
+            for stage, work in stages.items():
+                units = pending[stage]
+                if not units:
+                    continue
+                part = feats if units == wanted else feats.where(F.col("unit").isin(units))
+                lineage.run_unit(
+                    log, job_id, stage, [_unit_name(k) for k in units], fingerprint,
+                    partial(work, spark, part, units),
                 )
-                n_out = spark.read.parquet(f"{paths['1m']}/unit={k}").count()
-                return None, n_out
-
-            lineage.run_unit(log, job_id, "tier_cascade", unit, fingerprint, tier_work)
-            executed += 1
-
-        if unit not in done["chunks"]:
-            if fail_after_units is not None and executed >= fail_after_units:
-                raise PipelineFailure(f"injected failure before chunks {unit}")
-
-            def chunk_work(part=part, k=k):
-                wide = features.derive_features_chunked(part)
-                long = features.to_long(wide, GAPFILL_METRICS)
-                filled = gapfill.gapfill_sql(long, freq=gapfill_freq, method="linear")
-                filled.write.mode("overwrite").parquet(f"{paths['filled']}/unit={k}")
-                filled_r = spark.read.parquet(f"{paths['filled']}/unit={k}")
-                ch = chunks_mod.encode_chunks(filled_r, chunk_span=chunk_span)
-                ch.write.mode("overwrite").parquet(f"{paths['chunks']}/unit={k}")
-                n_out = spark.read.parquet(f"{paths['chunks']}/unit={k}").count()
-                return None, n_out
-
-            lineage.run_unit(log, job_id, "chunks", unit, fingerprint, chunk_work)
-            executed += 1
-
+        finally:
+            if shared:
+                feats.unpersist()
+    if truncated:
+        raise PipelineFailure(f"injected failure after {fail_after_units} units")
     return paths
 
 
@@ -156,25 +246,29 @@ def run_compaction(
     if not units:
         raise FileNotFoundError(f"no unit=* bucket dirs under {src}")
     for k in units:
-        unit = f"bucket={k}"
+        unit = _unit_name(k)
         if unit in done:
             continue
 
-        def work(k=k):
-            src_df = spark.read.parquet(f"{src}/unit={k}")
+        def work(k=k, unit=unit):
+            # blob and point counts of both sides are observed during the
+            # one write instead of re-scanned after it
+            obs_in, obs_out = Observation(), Observation()
+            stats = (F.count("*").alias("blobs"), F.sum("n").alias("points"))
+            src_df = spark.read.parquet(f"{src}/unit={k}").observe(obs_in, *stats)
             merged = chunks_mod.compact_chunks(src_df, to_span=to_span)
-            merged.write.mode("overwrite").parquet(f"{dst}/unit={k}")
-            out_df = spark.read.parquet(f"{dst}/unit={k}")
-            # one bookkeeping scan per side: blob count + point count
-            n_in, pts_in = src_df.agg(F.count("*"), F.sum("n")).first()
-            n_out, pts_out = out_df.agg(F.count("*"), F.sum("n")).first()
+            merged.observe(obs_out, *stats).write.mode("overwrite").parquet(
+                f"{dst}/unit={k}"
+            )
+            got_in, got_out = obs_in.get, obs_out.get
             # invariant worth failing loudly on: compaction must conserve
             # points exactly (blobs merge, points never drop or duplicate)
-            if pts_in != pts_out:
+            if got_in["points"] != got_out["points"]:
                 raise RuntimeError(
-                    f"compaction lost points in {unit}: {pts_in} -> {pts_out}"
+                    f"compaction lost points in {unit}: "
+                    f"{got_in['points']} -> {got_out['points']}"
                 )
-            return n_in, n_out
+            return {unit: (got_in["blobs"], got_out["blobs"])}
 
-        lineage.run_unit(log, job_id, stage, unit, fingerprint, work)
+        lineage.run_unit(log, job_id, stage, [unit], fingerprint, work)
     return dst

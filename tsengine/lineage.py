@@ -7,16 +7,20 @@ Generalizes the reference's idempotent skip-if-exists re-run guard
   (the same bucketing a production Iceberg table would declare as its
   partition transform ``bucket(B, conv_id)``);
 - each completed (stage, unit) appends a lineage row with row counts, wall
-  time and an input fingerprint;
+  time and an input fingerprint; the rows of one stage run are appended
+  together, in one write;
 - on re-run, units already ``done`` for the same job/stage/fingerprint are
   skipped BEFORE any compute is launched — resume costs one small parquet
   read, zero recompute (resume-tested in tests/test_lineage.py).
 
-Sinks are parquet directories with one subdirectory per unit
-(``unit=<k>/``), written atomically per unit — a unit is either fully
-present + recorded, or absent. With an Iceberg catalog the same layer maps
-onto snapshot IDs + ``overwritePartitions``; the unit scheduler is
-catalog-agnostic by design since this sandbox ships no Iceberg runtime.
+Sinks are parquet tables partitioned by unit (``unit=<k>/``). A stage
+writes all of its pending units in one job with dynamic partition
+overwrite, so each unit's directory is replaced whole when the job
+commits, and its lineage row is appended only after that — a unit is
+either present + recorded, or not recorded (and recomputed on resume).
+With an Iceberg catalog the same layer maps onto snapshot IDs +
+``overwritePartitions``; the unit scheduler is catalog-agnostic by design
+since no Iceberg runtime is required.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import time
 from datetime import datetime, timezone
 
 import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,32 +62,22 @@ class LineageLog:
         )
         return {r["unit"] for r in rows}
 
-    def record(
-        self,
-        job_id: str,
-        stage: str,
-        unit: str,
-        *,
-        fingerprint: str | None = None,
-        rows_in: int | None = None,
-        rows_out: int | None = None,
-        wall_ms: int | None = None,
-        status: str = "done",
-    ) -> None:
+    def record(self, rows: list[dict]) -> None:
+        """Append lineage rows in ONE write (one Spark job, one file).
+
+        Each row is a dict keyed by ``schema.LINEAGE`` column names; a
+        missing column is null, ``status`` defaults to ``done`` and
+        ``finished_at`` is the time of this call."""
+        if not rows:
+            return
+        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        # object columns keep ints exact next to nulls; a pandas frame goes
+        # through Arrow as a local relation, where a list of tuples would
+        # be parallelized and cost the write a Python worker round trip
         pdf = pd.DataFrame(
-            [
-                {
-                    "job_id": job_id,
-                    "stage": stage,
-                    "unit": unit,
-                    "input_fingerprint": fingerprint,
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "wall_ms": wall_ms,
-                    "status": status,
-                    "finished_at": datetime.now(timezone.utc).replace(tzinfo=None),
-                }
-            ]
+            [{"status": "done"} | r | {"finished_at": now} for r in rows],
+            columns=[f.name for f in LINEAGE.fields],
+            dtype=object,
         )
         self.spark.createDataFrame(pdf, schema=LINEAGE).coalesce(1).write.mode(
             "append"
@@ -108,35 +103,43 @@ class LineageLog:
         if isinstance(values, DataFrame):
             row = values.collect()[0]
             values = row.asDict()
-        for name, val in values.items():
-            self.record(
-                job_id,
-                stage,
-                f"metric:{name}",
-                rows_out=int(val) if val is not None else None,
-                status="metric",
-            )
+        self.record([
+            {
+                "job_id": job_id,
+                "stage": stage,
+                "unit": f"metric:{name}",
+                "rows_out": int(val) if val is not None else None,
+                "status": "metric",
+            }
+            for name, val in values.items()
+        ])
 
 
 def run_unit(
     log: LineageLog,
     job_id: str,
     stage: str,
-    unit: str,
+    units: list[str],
     fingerprint: str | None,
     fn,
-) -> bool:
-    """Execute ``fn() -> (rows_in, rows_out)`` for one work unit unless the
-    lineage log already marks it done. Returns True if executed."""
+) -> None:
+    """Execute ``fn() -> {unit: (rows_in, rows_out)}`` for a stage's
+    ``units`` and record one ``done`` row per unit, all in one lineage
+    write. Skipping finished units is the caller's job (it passes only
+    the units ``completed_units`` does not list). The units run together,
+    so every row carries the wall time of the whole call."""
     t0 = time.monotonic()
-    rows_in, rows_out = fn()
-    log.record(
-        job_id,
-        stage,
-        unit,
-        fingerprint=fingerprint,
-        rows_in=rows_in,
-        rows_out=rows_out,
-        wall_ms=int((time.monotonic() - t0) * 1000),
-    )
-    return True
+    counts = fn()
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    log.record([
+        {
+            "job_id": job_id,
+            "stage": stage,
+            "unit": u,
+            "input_fingerprint": fingerprint,
+            "rows_in": counts[u][0],
+            "rows_out": counts[u][1],
+            "wall_ms": wall_ms,
+        }
+        for u in units
+    ])

@@ -54,7 +54,10 @@ def rollup_from_raw(features_long: DataFrame, tier: str = "1m") -> DataFrame:
 
 
 def rollup_from_raw_wide_stats(
-    wide_features: DataFrame, metrics: list[str], tier: str = "1m"
+    wide_features: DataFrame,
+    metrics: list[str],
+    tier: str = "1m",
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Finest tier in WIDE-STATS form: one row per (conv_id, bucket_ts)
     carrying ``{m}__cnt/__sum/__min/__max/__sumsq`` for every metric —
@@ -68,7 +71,11 @@ def rollup_from_raw_wide_stats(
     is a ~|metrics|× cut of total shuffle bytes. Keeping the CASCADE in
     this form too (``cascade_wide``) extends the same cut to every tier:
     no per-metric row inflation and no string metric key ever enters a
-    shuffle; the long public view is a post-agg ``unpivot_stats`` stack."""
+    shuffle; the long public view is a post-agg ``unpivot_stats`` stack.
+
+    ``by`` names extra group-by columns carried into the output, e.g. the
+    work-unit column of ``jobs.run_pipeline`` (a function of conv_id, so
+    it never splits a group)."""
     unit = TIER_SPECS[tier]
     aggs = []
     for m in metrics:
@@ -81,22 +88,25 @@ def rollup_from_raw_wide_stats(
             F.sum(v * v).alias(f"{m}__sumsq"),
         ]
     return wide_features.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
+        *by, "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
     ).agg(*aggs)
 
 
-def unpivot_stats(g: DataFrame, metrics: list[str]) -> DataFrame:
+def unpivot_stats(
+    g: DataFrame, metrics: list[str], by: tuple[str, ...] = ()
+) -> DataFrame:
     """Wide-stats frame → the public long tier format
     (conv_id, bucket_ts, metric, cnt, sum, min, max, sumsq).
 
     stack() is a JVM-side generator on post-aggregation data (≥60× smaller
     than raw); all-null metric buckets (cnt 0) are dropped because they do
-    not exist in the long form."""
+    not exist in the long form. ``by`` columns are carried through."""
     pairs = ", ".join(
         f"'{m}', {m}__cnt, {m}__sum, {m}__min, {m}__max, {m}__sumsq"
         for m in metrics
     )
     return g.select(
+        *by,
         "conv_id",
         "bucket_ts",
         F.expr(
@@ -115,7 +125,9 @@ def rollup_from_raw_wide(
     )
 
 
-def cascade_wide(g: DataFrame, metrics: list[str], to_tier: str) -> DataFrame:
+def cascade_wide(
+    g: DataFrame, metrics: list[str], to_tier: str, by: tuple[str, ...] = ()
+) -> DataFrame:
     """Re-aggregate a finer WIDE-STATS tier into a coarser one without
     leaving the wide form (1m→1h, 1h→1d).
 
@@ -124,7 +136,8 @@ def cascade_wide(g: DataFrame, metrics: list[str], to_tier: str) -> DataFrame:
     the cascade never re-inflates to per-metric rows. Null semantics match
     the long path: an all-null metric bucket has cnt 0 and null sum/min/
     max/sumsq, and Spark's sum/min/max skip nulls, so it contributes
-    nothing — exactly as its absent long-form row would."""
+    nothing — exactly as its absent long-form row would. ``by`` columns
+    are extra group-by keys, as in ``rollup_from_raw_wide_stats``."""
     unit = TIER_SPECS[to_tier]
     aggs = []
     for m in metrics:
@@ -136,7 +149,7 @@ def cascade_wide(g: DataFrame, metrics: list[str], to_tier: str) -> DataFrame:
             F.sum(f"{m}__sumsq").alias(f"{m}__sumsq"),
         ]
     return g.groupBy(
-        "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
+        *by, "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
     ).agg(*aggs)
 
 
@@ -145,7 +158,7 @@ def publish_cascade_wide(
     out_root: str,
     metrics: list[str],
     tiers: list[str] | None = None,
-    suffix: str = "",
+    units: list[int] | None = None,
 ) -> None:
     """Publish the public long-form tier tables from an already-written
     wide-stats finest tier (``{out_root}/tier_{tiers[0]}_wide``),
@@ -158,32 +171,47 @@ def publish_cascade_wide(
     a single sequential tail of small jobs leaves most of the cluster
     idle); in local[N] bench runs it removes ~half the post-rollup serial
     tail. Output tables are byte-identical to the sequential chain
-    (verified in tests/test_rollup_wide.py). ``suffix`` is appended to
-    every table path (the per-bucket resume units in jobs.run_pipeline
-    publish to ``tier_{t}/unit={k}``)."""
+    (verified in tests/test_rollup_wide.py).
+
+    ``units`` switches to the unit-partitioned layout of
+    ``jobs.run_pipeline``: every table is partitioned by an integer
+    ``unit`` column, only those units are read, ``unit`` is carried as a
+    group-by key, and each write replaces exactly the ``unit=<k>``
+    directories it produces rows for (dynamic partition overwrite), so
+    all units of a stage publish in one job per table."""
     from concurrent.futures import ThreadPoolExecutor
 
-    tiers = list(tiers or TIER_ORDER)
+    from pyspark import inheritable_thread_target
 
-    def _publish(df: DataFrame, tier: str) -> None:
-        unpivot_stats(df, metrics).write.mode("overwrite").parquet(
-            f"{out_root}/tier_{tier}{suffix}"
-        )
+    tiers = list(tiers or TIER_ORDER)
+    by = ("unit",) if units is not None else ()
+
+    def _read(tier: str) -> DataFrame:
+        g = spark.read.parquet(f"{out_root}/tier_{tier}_wide")
+        return g.where(F.col("unit").isin(units)) if by else g
+
+    def _write(df: DataFrame, table: str) -> None:
+        w = df.write.mode("overwrite")
+        if by:
+            w = w.partitionBy(*by).option("partitionOverwriteMode", "dynamic")
+        w.parquet(f"{out_root}/{table}")
+
+    def _submit(ex, df: DataFrame, table: str):
+        # inheritable: the write job keeps the caller's job group,
+        # description and tags, so a run's jobs stay attributable to it
+        return ex.submit(inheritable_thread_target(spark)(_write), df, table)
 
     for i in range(1, len(tiers)):
-        g = spark.read.parquet(f"{out_root}/tier_{tiers[i - 1]}_wide{suffix}")
-        nxt = cascade_wide(g, metrics, tiers[i])
+        g = _read(tiers[i - 1])
+        nxt = cascade_wide(g, metrics, tiers[i], by)
         with ThreadPoolExecutor(2) as ex:
-            fin = ex.submit(_publish, g, tiers[i - 1])
+            fin = _submit(ex, unpivot_stats(g, metrics, by), f"tier_{tiers[i - 1]}")
             if i == len(tiers) - 1:
                 # last level: no coarser cascade will re-read it, so skip
                 # the wide scratch and publish the long form directly
-                nxt_f = ex.submit(_publish, nxt, tiers[i])
+                nxt_f = _submit(ex, unpivot_stats(nxt, metrics, by), f"tier_{tiers[i]}")
             else:
-                nxt_f = ex.submit(
-                    lambda d=nxt, t=tiers[i]: d.write.mode("overwrite")
-                    .parquet(f"{out_root}/tier_{t}_wide{suffix}")
-                )
+                nxt_f = _submit(ex, nxt, f"tier_{tiers[i]}_wide")
             fin.result()
             nxt_f.result()
 

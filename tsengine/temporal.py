@@ -1509,7 +1509,8 @@ def flow_pagerank(
         )
 
     r0 = F.transform(F.col("nodes"), lambda _: F.lit(1.0) / nn)
-    r_final = F.aggregate(
+    # sequence(1, n) counts DOWN for n < 1 (2+ steps), so no steps is r0
+    r_final = r0 if n_iter <= 0 else F.aggregate(
         F.sequence(F.lit(1), F.lit(int(n_iter))), r0, step
     )
     return (
