@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from tsengine.env_tuning import setdefault_simd
 
 # before ANY numpy import: virtualized-AVX workaround (see env_tuning.py)
@@ -25,3 +27,25 @@ def transcripts(spark):
     df = df.cache()
     df.count()
     return df
+
+
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    old = spark.conf.get(ARROW_BATCH)
+    spark.conf.set(ARROW_BATCH, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(ARROW_BATCH, old)
+
+
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """``with arrow_batch_rows(n):`` runs the block with Arrow batches of
+    ``n`` rows, then restores the session's batch size. The size is read
+    when a query executes, so the block must include the action
+    (``toPandas``, ``collect``, ...)."""
+    return lambda n: _arrow_batch_rows(spark, n)

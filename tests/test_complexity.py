@@ -984,6 +984,31 @@ def test_mann_kendall_many_series_batch_pass(spark):
         assert gz == pytest.approx(z, abs=2e-5), k
 
 
+_B = complexity.MK_BLOCK
+
+
+@pytest.mark.parametrize("n", [1, 2, _B - 1, _B, _B + 1, 3 * _B + 5])
+def test_mann_kendall_s_blockwise_equals_dense(n):
+    # tie-heavy integers: 7 distinct values, so most pairs are ties
+    x = np.random.default_rng(n).integers(0, 7, n).astype(np.int64)
+    dense = int(np.triu(np.sign(x[None, :] - x[:, None]), 1).sum())
+    assert complexity.mann_kendall_s(x) == dense
+
+
+def test_mann_kendall_s_memory_is_blockwise():
+    # the dense n×n sign matrix plus its triu copy is ~256 MB at n=4000
+    import tracemalloc
+
+    x = np.random.default_rng(3).integers(-500, 500, 4000).astype(np.int64)
+    tracemalloc.start()
+    try:
+        complexity.mann_kendall_s(x)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 * 1024 * 1024, peak
+
+
 def test_mann_kendall_rejects_nulls(spark):
     rows = [("c", T0, "m", None, 0)] + [
         ("c", T0 + dt.timedelta(minutes=i), "m", float(i), i)

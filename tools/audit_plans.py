@@ -338,28 +338,28 @@ def main() -> None:
 
     # continuation pack: ramps are two window passes + one island groupBy
     # on the series key's ONE exchange; Holt and LTTB are single
-    # grouped-pandas shuffles (repartition satisfies the groupBy
-    # clustering, no second exchange); PQ top-k is scan-speed encode +
-    # ADC lookups with a partial top-k — its one exchange is the final
-    # k-row singlePartition merge, and the 16-code "join" must compile
-    # to literal array exprs, never a real join
+    # sorted_batch_apply passes (one keyed repartition, a sort within
+    # partitions, mapInPandas — no second exchange); PQ top-k is
+    # scan-speed encode + ADC lookups with a partial top-k — its one
+    # exchange is the final k-row singlePartition merge, and the 16-code
+    # "join" must compile to literal array exprs, never a real join
     audit("ramp events (islands on one exchange)",
           anomaly.ramp_events(ev, threshold=20.0),
           ["single_exchange", "partial_agg", "no_cartesian"])
-    audit("holt linear (one grouped-pandas shuffle)",
+    audit("holt linear (one sorted-batch pass, carry)",
           temporal.holt_linear(ev.where(F.col("value").isNotNull()),
                                alpha=0.5, beta=0.25, tiebreak="event_id"),
           ["single_exchange", "no_cartesian"])
-    audit("holt winters (one grouped-pandas shuffle)",
+    audit("holt winters (one sorted-batch pass, carry)",
           temporal.holt_winters(ev.where(F.col("value").isNotNull()),
                                 alpha=0.5, beta=0.25, gamma=0.25, m=4,
                                 tiebreak="event_id"),
           ["single_exchange", "no_cartesian"])
-    audit("kalman (one grouped-pandas shuffle)",
+    audit("kalman (one sorted-batch pass, carry)",
           temporal.kalman_filter(ev.where(F.col("value").isNotNull()),
                                  q=0.25, r=1.0, tiebreak="event_id"),
           ["single_exchange", "no_cartesian"])
-    audit("matrix profile (one grouped-pandas shuffle)",
+    audit("matrix profile (one sorted-batch pass)",
           anomaly.matrix_profile(ev.where(F.col("value").isNotNull()), w=4),
           ["single_exchange", "no_cartesian"])
     audit("peaks (one window pass, scan-speed filter)",
@@ -368,7 +368,7 @@ def main() -> None:
     audit("dtw profile (one partial-agg groupBy + scan UDF)",
           temporal.dtw_hour_profile(ev, ref_key="0", band=6),
           ["single_exchange", "partial_agg", "no_cartesian"])
-    audit("lttb (one grouped-pandas shuffle)",
+    audit("lttb (one sorted-batch pass)",
           rolling.lttb_downsample(ev, n_out=8),
           ["single_exchange", "no_cartesian"])
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
@@ -386,13 +386,13 @@ def main() -> None:
                             n_codes=16, m_sub=8),
           ["pushed_filters", "no_cartesian"])
 
-    # round-5 pack: PELT and the grouped-pandas DPs ride ONE series-key
+    # round-5 pack: PELT and the sorted-batch DPs ride ONE series-key
     # shuffle; Page-Hinkley is four cumulative windows on one sort;
     # funnel chains its per-step conditional mins as unbounded-frame
     # windows over ONE exchange that the final agg reuses (no per-step
     # self-joins); URL dedup is scan-speed canonicalization + one
     # canon-keyed partial-agg groupBy; cohort retention scans raw once
-    audit("pelt segments (one grouped-pandas shuffle)",
+    audit("pelt segments (one sorted-batch pass)",
           anomaly.pelt_segments(ev.where(F.col("value").isNotNull()),
                                 penalty=5000.0),
           ["single_exchange", "no_cartesian"])
@@ -437,7 +437,7 @@ def main() -> None:
                         (F.col("event_id") % 997 * 1024).alias("bytes")),
               size_col="bytes", target_bytes=1 << 22),
           ["single_exchange", "no_cartesian"])
-    audit("sigma clip (one grouped-pandas shuffle)",
+    audit("sigma clip (one sorted-batch pass)",
           anomaly.sigma_clip(ev.where(F.col("value").isNotNull()),
                              c=2.0, max_peel=3),
           ["single_exchange", "no_cartesian"])
@@ -461,9 +461,9 @@ def main() -> None:
     audit("bloom membership probe (broadcast bit join, partial dedup)",
           sketches.bloom_query(bloom_bits, probes, "probe", ["metric"]),
           ["partial_agg"])
-    audit("kalman chunked pass (one grouped-pandas shuffle per chunk)",
+    audit("kalman chunked (one sorted-batch pass, carry)",
           eq.QUERIES["ts_kalman_chunked"](spark, sf),
-          ["no_cartesian"])
+          ["single_exchange", "no_cartesian"])
     audit("png media decode (mapInPandas scan stages, zero exchange)",
           eq.QUERIES["mm_png_roundtrip"](spark, sf),
           ["single_exchange", "no_cartesian"])

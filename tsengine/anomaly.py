@@ -1017,12 +1017,13 @@ def matrix_profile(
     ``((d1+d2)+d3)+d4`` that the SQL oracle unrolls verbatim, and min
     is comparison-only — bitwise parity with no rounding.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series;
-    per-series cost O(n²·w) with n = points per series — fine for the
-    bounded per-conversation series this engine rolls up (and the
-    chunked-mega-series path caps n per task); for very long single
-    series the streaming STOMP ordering is the known refinement, same
-    output contract."""
+    Shape for 100 TB: one ``sorted_batch_apply`` pass keyed by the
+    series (whole-series contract: every window needs the whole series,
+    so there is no carry); per-series cost O(n²·w) and task memory O(n)
+    with n = points per series — fine for the bounded per-conversation
+    series this engine rolls up, but nothing caps n; for very long
+    single series the streaming STOMP ordering is the known refinement,
+    same output contract."""
     ww = int(w)
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1104,15 +1105,15 @@ def pelt_segments(
     both engines carry bitwise-identical DP state and pick identical
     backpointers; only the 6-dp print is rounded.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series;
-    per-series cost is O(n·|candidates|) — O(n) expected under PELT's
-    linear-penalty regime, O(n²) worst case on a changepoint-free series
-    where nothing prunes. The inner candidate scan is numpy-vectorized
-    (identical elementwise IEEE ops, np.argmin = earliest-s tie-break),
-    so even the worst case runs at array speed; the whole series still
-    sits in ONE task (no chunked carry-in on this path — the DP's
-    backtrack needs global state), so a pathological single series
-    bounds task memory at O(n)."""
+    Shape for 100 TB: one ``sorted_batch_apply`` pass keyed by the
+    series; per-series cost is O(n·|candidates|) — O(n) expected under
+    PELT's linear-penalty regime, O(n²) worst case on a changepoint-free
+    series where nothing prunes. The inner candidate scan is
+    numpy-vectorized (identical elementwise IEEE ops, np.argmin =
+    earliest-s tie-break), so even the worst case runs at array speed;
+    the whole series still sits in ONE task (whole-series contract, no
+    carry — the DP's backtrack needs global state), so a single series
+    costs O(n) task memory and nothing caps n."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1144,7 +1145,6 @@ def pelt_segments(
         import numpy as np
         import pandas as pd
 
-        pdf = pdf.sort_values(order, kind="mergesort")
         y = pdf[value_col].to_numpy(dtype="float64")
         ts = pdf[ts_col].reset_index(drop=True)
         n = len(y)
@@ -1205,10 +1205,10 @@ def pelt_segments(
         ]
         return pd.DataFrame(rows, columns=cols)
 
-    from tsengine.session import grouped_apply
+    from tsengine.session import per_series, sorted_batch_apply
 
     base = df.where(F.col(value_col).isNotNull())
-    return grouped_apply(base, klist, fn, out_schema)
+    return sorted_batch_apply(base, klist, order, per_series(fn), out_schema)
 
 
 def sigma_clip(
@@ -1241,9 +1241,10 @@ def sigma_clip(
     bitwise-identical state through every round; only the final
     mean/sd print is rounded.
 
-    Shape for 100 TB: one grouped-pandas shuffle keyed by the series;
-    per-series cost O(max_peel · n), bounded state (the chunked
-    mega-series path caps n per task)."""
+    Shape for 100 TB: one ``sorted_batch_apply`` pass keyed by the
+    series; per-series cost O(max_peel · n). Every peel round needs the
+    whole series (whole-series contract, no carry), so a single series
+    costs O(n) task memory and nothing caps n."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1275,7 +1276,6 @@ def sigma_clip(
 
         import pandas as pd
 
-        pdf = pdf.sort_values(order, kind="mergesort")
         y = [float(v) for v in pdf[value_col]]
         n = len(y)
         S = 0.0
@@ -1327,10 +1327,10 @@ def sigma_clip(
         ]
         return pd.DataFrame(rows, columns=cols)
 
-    from tsengine.session import grouped_apply
+    from tsengine.session import per_series, sorted_batch_apply
 
     base = df.where(F.col(value_col).isNotNull())
-    return grouped_apply(base, klist, fn, out_schema)
+    return sorted_batch_apply(base, klist, order, per_series(fn), out_schema)
 
 
 # shared by the Spark side and the DuckDB oracle (entry `ts_hurst`):

@@ -1,298 +1,24 @@
-"""Carry-in chunked execution for per-series sequential recursions.
+"""Bounded-memory names for the per-series sequential recursions.
 
-The grouped-pandas recursion operators (``temporal.kalman_filter``,
-``temporal.holt_linear``, ``temporal.holt_winters``) hold ONE full series
-per task — fine at the briefed workload (per-conversation series are
-naturally bounded), but a 10⁸-turn series would OOM a single task. This
-module removes that bound with the same carry-in idiom
-``streaming.streaming_cusum`` already uses across micro-batches, applied
-to batch chunks:
+``temporal.kalman_filter``, ``temporal.holt_linear`` and
+``temporal.holt_winters`` run on the carry contract of
+``session.sorted_batch_apply``: each Python worker takes its partition one
+Arrow batch at a time and carries the recursion state of the series a
+batch leaves open into the next batch, so a worker holds one batch
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) whatever the
+series length, in one Spark job. These names are those operators; they
+stay for the callers that ask for the bounded-memory form by name.
 
-1. one window assigns every row its per-series ordinal and
-   ``chunk = (ordinal - 1) div chunk_rows`` (integral division — exact at
-   any length);
-2. the driver sweeps chunk indices IN ORDER; pass k runs every series'
-   k-th chunk in parallel through one ``grouped_apply``, seeded with the
-   state its series carried out of pass k-1 (broadcast);
-3. each group emits its output rows plus ONE state marker row
-   (``_state`` array<double>); the markers — O(active series) scalars,
-   the same bounded-collect contract as ``streaming_cusum``'s state store
-   and ``vecops``' kmeans|| candidates — come back to the driver and seed
-   the next pass.
-
-Because the chunk cores are the SAME sequential functions the unchunked
-operators run (``temporal._kalman_seq`` / ``_holt_seq`` / ``_hw_seq``),
-the chunked path is bitwise-identical to the unchunked one by
-construction: the carried state values are exactly the floats the
-unbroken loop would hold at the chunk boundary.
-
-Scale shape: per-task memory is O(chunk_rows), never O(series length);
-passes = ceil(longest series / chunk_rows), each pass one job over the
-cached chunked base (spill-to-disk persist). Parallelism within a pass is
-across series — a single mega-series is inherently sequential, which is
-exactly why its memory, not its latency, is the thing to bound.
-
-Not offered for ``pelt`` / ``sigma_clip`` / ``lttb`` / ``matrix_profile``:
-those need global series state (a global DP backtrack, a global argmax
-peel, global buckets, all windows) — no closed-form carry exists, so
-chunking them would change results. Their docstrings say so.
+``pelt`` / ``sigma_clip`` / ``lttb`` / ``matrix_profile`` have no such
+form: they need global series state (a global DP backtrack, a global
+argmax peel, global buckets, all windows), so no closed-form carry
+exists and they run on the whole-series contract.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from tsengine.temporal import holt_linear as holt_linear_chunked
+from tsengine.temporal import holt_winters as holt_winters_chunked
+from tsengine.temporal import kalman_filter as kalman_filter_chunked
 
-from tsengine.session import grouped_apply
-
-
-def chunked_series_apply(
-    df: DataFrame,
-    keys: list[str],
-    order: list[str],
-    core,
-    out_schema: StructType,
-    chunk_rows: int = 1_000_000,
-) -> DataFrame:
-    """Run ``core(pdf_sorted, state_or_None) -> (out_pdf, new_state)``
-    over every series in ``chunk_rows``-row chunks with driver-carried
-    state (module docstring has the full idiom). ``new_state`` must be a
-    list of floats (or None to stay cold); ``out_pdf``'s columns must
-    match ``out_schema``."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c) for c in order])
-    base = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .withColumn("_chunk", F.expr(f"(_rn - 1) div {int(chunk_rows)}L"))
-        .drop("_rn")
-    )
-    from pyspark import StorageLevel
-
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        n_chunks = base.agg(F.max("_chunk")).first()[0]
-        if n_chunks is None:  # empty input
-            return spark.createDataFrame([], out_schema)
-
-        # the state marker row carries nulls in every non-key column, so
-        # every field must be nullable regardless of the input schema
-        # (spark.range's id, for one, arrives non-nullable)
-        full_schema = StructType(
-            [
-                StructField(f.name, f.dataType, nullable=True)
-                for f in out_schema.fields
-            ]
-            + [StructField("_state", ArrayType(DoubleType()))]
-        )
-        out_cols = [f.name for f in out_schema.fields]
-
-        def make_fn(bstates):
-            def fn(pdf):
-                pdf = pdf.sort_values(order, kind="mergesort")
-                key = tuple(pdf.iloc[0][k] for k in keys)
-                out, new_state = core(
-                    pdf.drop(columns=["_chunk"]), bstates.value.get(key)
-                )
-                out = out[out_cols].copy()
-                out["_state"] = None
-                if new_state is not None:
-                    marker = {
-                        c: pd.Series([None], dtype="object") for c in out_cols
-                    }
-                    for k, v in zip(keys, key):
-                        marker[k] = pd.Series([v], dtype="object")
-                    marker["_state"] = pd.Series(
-                        [[float(x) for x in new_state]], dtype="object"
-                    )
-                    out = pd.concat(
-                        [out, pd.DataFrame(marker)], ignore_index=True
-                    )
-                return out
-
-            return fn
-
-        states: dict[tuple, list[float]] = {}
-        parts: list[DataFrame] = []
-        for k in range(int(n_chunks) + 1):
-            bstates = spark.sparkContext.broadcast(states)
-            out_k = grouped_apply(
-                base.where(F.col("_chunk") == k), keys, make_fn(bstates),
-                full_schema,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            srows = (
-                out_k.where(F.col("_state").isNotNull())
-                .select(*keys, "_state")
-                .collect()
-            )
-            states = {
-                tuple(r[kk] for kk in keys): list(r["_state"]) for r in srows
-            }
-            parts.append(out_k.where(F.col("_state").isNull()).drop("_state"))
-
-        res = parts[0]
-        for p in parts[1:]:
-            res = res.unionByName(p)
-        return res
-    finally:
-        # chunk outputs are persisted; the base's cache is only needed
-        # while the passes execute (recompute-on-loss goes back to the
-        # source plan, which is still correct — states are already
-        # collected and broadcast)
-        base.unpersist(blocking=False)
-
-
-def kalman_filter_chunked(
-    df: DataFrame,
-    q: float = 0.25,
-    r: float = 1.0,
-    on: tuple[str, ...] = ("conv_id", "metric"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str | None = None,
-    chunk_rows: int = 1_000_000,
-) -> DataFrame:
-    """``temporal.kalman_filter`` with bounded per-task memory: same
-    recurrence, same output, O(chunk_rows) per task instead of O(series
-    length). Bitwise-identical to the unchunked operator (shared
-    ``temporal._kalman_seq`` core; state = 5 floats per series)."""
-    from tsengine import temporal
-
-    order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("kf_level", DoubleType()),
-            StructField("kf_velocity", DoubleType()),
-            StructField("kf_innov", DoubleType()),
-            StructField("kf_gain", DoubleType()),
-        ]
-    )
-    qq, rr = float(q), float(r)
-    q11, q12, q22 = 0.25 * qq, 0.5 * qq, qq
-
-    def core(pdf, state):
-        y = pdf[value_col].to_numpy(dtype="float64")
-        start, ls, vs, innovs, gains, new_state = temporal._kalman_seq(
-            y, state, q11, q12, q22, rr
-        )
-        out = pdf.iloc[start:].copy()
-        out["kf_level"] = ls
-        out["kf_velocity"] = vs
-        out["kf_innov"] = innovs
-        out["kf_gain"] = gains
-        return out, None if new_state is None else list(new_state)
-
-    return chunked_series_apply(
-        df, list(on), order, core, out_schema, chunk_rows=chunk_rows
-    )
-
-
-def holt_linear_chunked(
-    df: DataFrame,
-    alpha: float,
-    beta: float,
-    on: tuple[str, ...] = ("conv_id", "metric"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str | None = None,
-    chunk_rows: int = 1_000_000,
-) -> DataFrame:
-    """``temporal.holt_linear`` with bounded per-task memory (shared
-    ``temporal._holt_seq`` core; state = 2 floats per series)."""
-    from tsengine import temporal
-
-    order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("holt_level", DoubleType()),
-            StructField("holt_trend", DoubleType()),
-            StructField("holt_fcst", DoubleType()),
-        ]
-    )
-    a, b_gain = float(alpha), float(beta)
-    one_a, one_b = 1.0 - a, 1.0 - b_gain
-
-    def core(pdf, state):
-        y = pdf[value_col].to_numpy(dtype="float64")
-        lv, tr, new_state = temporal._holt_seq(
-            y, state, a, one_a, b_gain, one_b
-        )
-        out = pdf.copy()
-        out["holt_level"] = lv
-        out["holt_trend"] = tr
-        out["holt_fcst"] = [l + b for l, b in zip(lv, tr)]
-        return out, None if new_state is None else list(new_state)
-
-    return chunked_series_apply(
-        df, list(on), order, core, out_schema, chunk_rows=chunk_rows
-    )
-
-
-def holt_winters_chunked(
-    df: DataFrame,
-    alpha: float,
-    beta: float,
-    gamma: float,
-    m: int = 4,
-    on: tuple[str, ...] = ("conv_id", "metric"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str | None = None,
-    chunk_rows: int = 1_000_000,
-) -> DataFrame:
-    """``temporal.holt_winters`` with bounded per-task memory (shared
-    ``temporal._hw_seq`` core). Per-series state is phase-coded into the
-    double array: ``[0, k, buf...]`` while still buffering the first m
-    observations (a chunk can be smaller than m), ``[1, level, trend,
-    season...]`` once running."""
-    from tsengine import temporal
-
-    order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("hw_level", DoubleType()),
-            StructField("hw_trend", DoubleType()),
-            StructField("hw_season", DoubleType()),
-            StructField("hw_fcst", DoubleType()),
-        ]
-    )
-    a, bg, g = float(alpha), float(beta), float(gamma)
-    one_a, one_b, one_g = 1.0 - a, 1.0 - bg, 1.0 - g
-    mm = int(m)
-
-    def decode(arr):
-        if arr is None:
-            return None
-        if arr[0] == 0.0:
-            k = int(arr[1])
-            return ("init", [float(x) for x in arr[2 : 2 + k]])
-        return ("run", float(arr[1]), float(arr[2]),
-                [float(x) for x in arr[3 : 3 + mm]])
-
-    def encode(state):
-        if state[0] == "init":
-            buf = state[1]
-            return [0.0, float(len(buf))] + [float(x) for x in buf]
-        _, level, trend, season = state
-        return [1.0, float(level), float(trend)] + [float(x) for x in season]
-
-    def core(pdf, state):
-        y = pdf[value_col].to_numpy(dtype="float64")
-        start, lv, tr, se, fc, new_state = temporal._hw_seq(
-            y, decode(state), a, one_a, bg, one_b, g, one_g, mm
-        )
-        out = pdf.iloc[start:].copy()
-        out["hw_level"] = lv
-        out["hw_trend"] = tr
-        out["hw_season"] = se
-        out["hw_fcst"] = fc
-        return out, encode(new_state)
-
-    return chunked_series_apply(
-        df, list(on), order, core, out_schema, chunk_rows=chunk_rows
-    )
+__all__ = ["kalman_filter_chunked", "holt_linear_chunked", "holt_winters_chunked"]

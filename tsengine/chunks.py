@@ -10,9 +10,10 @@ Skew design (SURVEY §7 hard-part (e)): chunking is TIME-BASED, not
 row-count-based. ``chunk_start = floor(ts, chunk_span)`` is a pure column
 expression — no window/row_number sort pass over raw data — and it bounds
 group size: a mega-conversation with 10⁸ turns lands in many independent
-(conv, metric, day) groups instead of one giant applyInPandas group, so no
-single task OOMs. This IS the salting: the chunk key is a deterministic,
-semantically meaningful salt, and AQE handles any residual imbalance.
+(conv, metric, chunk-range) groups instead of one giant series, so no
+``sorted_batch_apply`` worker holds the whole conversation. This IS the
+salting: the chunk key is a deterministic, semantically meaningful salt,
+and AQE handles any residual imbalance.
 Chunks are independently decodable → time-range pruning at read
 (min/max chunk_start predicate pushdown on the chunk table's parquet
 stats) and embarrassingly parallel decode.
@@ -382,7 +383,8 @@ def compact_chunks(
     )
     # blob rows are ~compression× smaller than the points they carry, so
     # AQE's byte-based coalescing would fold them into one python task —
-    # grouped_apply restores group-count parallelism (see session.py)
+    # sorted_batch_apply's explicit repartition keeps group-count
+    # parallelism (see session.py)
     return sorted_batch_apply(
         keyed, ["conv_id", "metric", "_salt"],
         ["compact_start", "chunk_start"], batch_merge, CHUNKS,

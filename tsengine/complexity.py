@@ -862,6 +862,28 @@ def hill_tail(
     )
 
 
+# rows of the pair matrix mann_kendall_s compares at once: memory is
+# O(n·MK_BLOCK) bytes instead of the dense O(n²)
+MK_BLOCK = 256
+
+
+def mann_kendall_s(x) -> int:
+    """Mann-Kendall S = Σ_{i<j} sign(x_j − x_i) of an integer array, one
+    block of rows i at a time: the pairs with j in a later block are
+    counted as (#greater − #less) on boolean matrices, the pairs inside
+    the block with an upper-triangle sign matrix. Exact integer."""
+    import numpy as np
+
+    s = 0
+    for a in range(0, len(x), MK_BLOCK):
+        b = min(a + MK_BLOCK, len(x))
+        xb = x[a:b, None]
+        later = x[None, b:]
+        s += int(np.count_nonzero(later > xb)) - int(np.count_nonzero(later < xb))
+        s += int(np.triu(np.sign(x[None, a:b] - xb), 1).sum())
+    return s
+
+
 def mann_kendall(
     df: DataFrame, value_scale: int = 100, min_n: int = 8
 ) -> DataFrame:
@@ -879,6 +901,8 @@ def mann_kendall(
     ((s∓1)/sqrt(var) on doubles), but one series-keyed exchange instead
     of two plus an O(n²)-row join intermediate; the final 5-dp round
     stays a Spark-side expression like every other oracle-gated float.
+    S is summed over row blocks (``mann_kendall_s``), so a series of n
+    points costs O(n·MK_BLOCK) worker memory, not a dense n×n matrix.
     Requires non-null values (the long feature stream contract).
     """
     import numpy as np
@@ -903,8 +927,7 @@ def mann_kendall(
             if n < min_n:
                 continue
             x = c[s:e]
-            d = np.sign(x[None, :] - x[:, None])
-            s_stat = int(np.triu(d, 1).sum())
+            s_stat = mann_kendall_s(x)
             _, cnt = np.unique(x, return_counts=True)
             tt = cnt[cnt > 1].astype(np.int64)
             tie = int((tt * (tt - 1) * (2 * tt + 5)).sum())

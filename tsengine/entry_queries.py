@@ -2786,7 +2786,7 @@ FROM c
 )
 def ts_ewma(spark, sf_dir):
     """Per-conversation exponential smoothing (alpha = 0.25, recursive
-    ``temporal.ewma`` over applyInPandas) against the closed-form SQL
+    ``temporal.ewma`` over sorted_batch_apply) against the closed-form SQL
     oracle s_t = (1-a)^t·[x_0 + a·Σ(1-a)^(-i)·x_i] — the recursion and
     the prefix-sum form must agree to 4 decimals (safe: ≤ 99 rows per
     conversation keeps (1-a)^(-t) finite). Nulls filtered before
@@ -4875,7 +4875,7 @@ FROM hw
 def ts_holt_linear(spark, sf_dir):
     """Holt's two-parameter linear-trend smoothing (`temporal.holt_linear`,
     α=0.5, β=0.25): coupled level/trend recurrence with no closed form —
-    the Spark side is one applyInPandas shuffle keyed by the series,
+    the Spark side is one sorted_batch_apply pass keyed by the series,
     the oracle a DuckDB recursive CTE advancing every series in lockstep
     over the turn ordinal. The gains are exactly representable binary
     fractions and both sides evaluate the update in the same association
@@ -5037,23 +5037,18 @@ def ts_kalman(spark, sf_dir):
 
 
 def ts_kalman_chunked(spark, sf_dir):
-    """`chunked.kalman_filter_chunked` — the bounded-memory carry-in
-    variant of `ts_kalman`: the series splits into 8-row chunks (max
-    series here is 24 rows, so every long series genuinely crosses ≥ 2
-    chunk boundaries) and per-series state — (l, v, p11, p12, p22), five
-    doubles — carries across passes exactly as `streaming_cusum` carries
-    across micro-batches. Shares `temporal._kalman_seq` with the
-    unchunked operator, so it is bitwise-identical by construction; the
-    oracle is therefore the SAME recursive CTE as `ts_kalman`, making
-    the chunk-boundary parity driver-checkable. Per-task memory is
-    O(chunk_rows) regardless of series length (tests run one 10⁶-row
-    series in a 1 GiB session)."""
+    """`chunked.kalman_filter_chunked`, the bounded-memory name of
+    `temporal.kalman_filter`: one sorted_batch_apply pass that carries
+    the per-series state — (l, v, p11, p12, p22), five doubles — across
+    Arrow batches, so a worker holds one batch whatever the series
+    length (tests run one 10⁶-row series in a 1 GiB session and compare
+    Arrow batch sizes bit for bit). The oracle is the SAME recursive CTE
+    as `ts_kalman`."""
     from tsengine import chunked
 
     ev = _events_long(spark, sf_dir).where(F.col("value").isNotNull())
     out = chunked.kalman_filter_chunked(
-        ev, q=0.25, r=1.0, on=("conv_id", "metric"),
-        tiebreak="event_id", chunk_rows=8,
+        ev, q=0.25, r=1.0, on=("conv_id", "metric"), tiebreak="event_id",
     )
     return out.select(
         "conv_id", "metric", "event_id",
@@ -5068,18 +5063,18 @@ q("ts_kalman_chunked", ORACLES["ts_kalman"])(ts_kalman_chunked)
 
 
 def ts_holt_winters_chunked(spark, sf_dir):
-    """`chunked.holt_winters_chunked` — bounded-memory carry-in variant
-    of `ts_holt_winters` with chunk_rows=3 < m=4, so the FPP init window
-    itself spans a chunk boundary (the phase-coded state's hard case:
-    the first chunk carries a partial init buffer, not yet a level).
-    Shares `temporal._hw_seq` with the unchunked operator — bitwise-
-    identical, same recursive-CTE oracle as `ts_holt_winters`."""
+    """`chunked.holt_winters_chunked`, the bounded-memory name of
+    `temporal.holt_winters`: the level/trend/season state — or the
+    partial FPP init buffer, while fewer than m points have been seen —
+    carries across Arrow batches (tests run Arrow batches of 2 and 3
+    rows < m=4, so the init window itself spans a batch boundary). Same
+    recursive-CTE oracle as `ts_holt_winters`."""
     from tsengine import chunked
 
     ev = _events_long(spark, sf_dir).where(F.col("value").isNotNull())
     out = chunked.holt_winters_chunked(
         ev, alpha=0.5, beta=0.25, gamma=0.25, m=4,
-        on=("conv_id", "metric"), tiebreak="event_id", chunk_rows=3,
+        on=("conv_id", "metric"), tiebreak="event_id",
     )
     return out.select(
         "conv_id", "metric", "event_id",
@@ -5153,7 +5148,7 @@ def ts_lttb_downsample(spark, sf_dir):
     Steinarsson 2013) at n_out=8 — the sequential shape-optimal
     downsampler: each middle bucket's winner maximizes the triangle with
     the previously selected point and the next bucket's average. The
-    Spark side is one applyInPandas shuffle with the greedy loop in
+    Spark side is one sorted_batch_apply pass with the greedy loop in
     numpy; the oracle replays the recurrence as a DuckDB recursive CTE
     whose recursive term is a LATERAL argmax (ORDER BY area DESC LIMIT
     1), advancing every series in lockstep over the bucket ordinal. The

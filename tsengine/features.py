@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tsengine.session import grouped_apply
+from tsengine.session import per_series, sorted_batch_apply
 
 # Wide-frame metric columns produced by the default pack.
 DEFAULT_METRICS = [
@@ -254,11 +254,12 @@ def default_pack(pdf: pd.DataFrame) -> pd.DataFrame:
 def apply_signal_pack_pandas(
     df: DataFrame, pack: SignalFn = default_pack, metrics: list[str] | None = None
 ) -> DataFrame:
-    """Run a pandas signal pack per conversation via applyInPandas.
+    """Run a pandas signal pack per conversation through
+    ``sorted_batch_apply`` (whole-series contract).
 
-    The group frame handed to ``pack`` IS rewemo's per-cell frame
-    (SURVEY §1.1). Sorting inside the pack is mandatory — Spark does not
-    guarantee intra-group order."""
+    The frame handed to ``pack`` IS rewemo's per-cell frame (SURVEY
+    §1.1): one whole conversation, already sorted by ``turn_idx``; the
+    default pack still sorts it, so a pack stays correct on its own."""
     metrics = metrics or DEFAULT_METRICS
     out_schema = ", ".join(
         ["conv_id string", "turn_idx int", "role string", "text string",
@@ -270,7 +271,9 @@ def apply_signal_pack_pandas(
     def runner(pdf: pd.DataFrame) -> pd.DataFrame:
         return pack(pdf)[cols]
 
-    return grouped_apply(df, ["conv_id"], runner, out_schema)
+    return sorted_batch_apply(
+        df, ["conv_id"], ["turn_idx"], per_series(runner), out_schema
+    )
 
 
 def rank_normalize(

@@ -14,7 +14,7 @@ Two interchangeable implementations, tested equal:
   grid explode → left join → prev/next window blend. Everything JVM-side;
   the only shuffles are the bucket groupBy and the grid join, both keyed by
   (conv_id, metric) so they co-partition. This is the 100 TB path.
-- ``gapfill_pandas`` — applyInPandas with pandas ``reindex + interpolate``,
+- ``gapfill_pandas`` — ``sorted_batch_apply`` with pandas ``reindex + interpolate``,
   bit-for-bit the reference's semantics; the oracle twin and the escape
   hatch for exotic fill methods.
 
@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tsengine.session import grouped_apply
+from tsengine.session import per_series, sorted_batch_apply
 
 FREQ = {
     "1m": ("minute", "INTERVAL 1 MINUTE", "1min", 60),
@@ -152,9 +152,9 @@ def gapfill_pandas(
     pad_steps: int = 0,
 ) -> DataFrame:
     """Reference-exact pandas twin (`resample().interpolate()` /
-    trailing-pad, `ncep/wind.py:187-197`). Grouped by (conv_id, metric) so
-    one series per Arrow batch — skew-bounded because a series at grid
-    resolution is |range|/freq points regardless of raw turn count."""
+    trailing-pad, `ncep/wind.py:187-197`), run on each whole (conv_id,
+    metric) series — skew-bounded because a series at grid resolution is
+    |range|/freq points regardless of raw turn count."""
     _, _, pfreq, step_s = FREQ[freq]
 
     def fill(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -186,7 +186,9 @@ def gapfill_pandas(
             }
         )
 
-    return grouped_apply(features_long, ["conv_id", "metric"], fill, OUT_SCHEMA)
+    return sorted_batch_apply(
+        features_long, ["conv_id", "metric"], ["ts"], per_series(fill), OUT_SCHEMA
+    )
 
 
 def gap_metrics(filled_df: DataFrame) -> DataFrame:

@@ -291,7 +291,7 @@ def lttb_downsample(
 
     The selection is a true recurrence (bucket b's winner depends on
     bucket b−1's), so this is the documented legitimate Python path: one
-    ``applyInPandas`` shuffle keyed by the series, the greedy loop in
+    ``sorted_batch_apply`` pass keyed by the series, the greedy loop in
     numpy inside the Arrow batch — parallel ACROSS series, sequential
     within one, exactly like ``temporal.holt_linear``.
 

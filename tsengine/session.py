@@ -194,55 +194,38 @@ def stop_spark() -> None:
     # getOrCreate() after stop() honors a new master.
 
 
-def grouped_apply(df, keys: list[str], fn, schema):
-    """``groupBy(keys).applyInPandas`` with an EXPLICIT pre-repartition on
-    the group keys — the grouped-UDF parallelism fix.
+def sorted_batch_apply(
+    df, keys: list[str], order: list[str], batch_fn, schema, carry: bool = False
+):
+    """The engine's one per-series execution primitive: ``repartition(N,
+    keys)`` → ``sortWithinPartitions(keys + order)`` → ``mapInPandas``.
+    Each partition streams through as full Arrow batches, rows of one
+    series contiguous and sorted by ``order``; numpy change points give
+    ``batch_fn`` the series bounds, so per-series cost is an index slice
+    (a per-group ``applyInPandas`` paid ~5 ms per group for its own
+    Arrow batch, frame, call and concat).
 
-    Why: AQE coalesces post-shuffle partitions by BYTES, but a python
-    grouped-UDF stage's cost scales with GROUP COUNT (per-group Arrow
-    frame + python dispatch), not bytes. A compressed/blob-sized or
-    small-SF input folds into one post-shuffle partition and every group
-    then runs serially in a single python task — measured 9.9 s for a
-    NO-OP grouped UDF over 39 K chunk-table rows (12 MB) at sf0.1, vs
-    2.4 s for the real merge once parallelized. An explicit
-    ``repartition(N, keys)`` is exempt from AQE coalescing and its hash
-    partitioning satisfies the groupBy's clustering requirement, so
-    Catalyst inserts NO second exchange — same shuffle count, restored
-    parallelism. N = ``spark.sql.shuffle.partitions``, the same
-    cluster-sized knob every other exchange here uses (AQE's skew
-    handling cannot split a pandas group anyway — rows of one group must
-    co-locate — so nothing real is lost at 100 TB either).
-    """
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        df.repartition(n_part, *keys)
-        .groupBy(*keys)
-        .applyInPandas(fn, schema=schema)
-    )
+    The explicit repartition is exempt from AQE's byte-based coalescing:
+    a Python stage's cost scales with series count, not bytes, and a
+    small or blob-sized input would otherwise fold into one post-shuffle
+    partition and run every series in one task. N is
+    ``spark.sql.shuffle.partitions``, the knob every other exchange uses.
 
+    ``batch_fn`` gets ``(pdf, starts, ends)``: series g is rows
+    ``starts[g]:ends[g]`` of ``pdf``. The operator picks one of two
+    contracts:
 
-def sorted_batch_apply(df, keys: list[str], order: list[str], batch_fn, schema):
-    """High-group-count fast path for per-series operators.
-
-    ``groupBy().applyInPandas`` pays a per-GROUP toll (one Arrow batch,
-    one pandas DataFrame construction, one Python call, one result
-    concat per group) — measured ~5 ms/group, which dominates wall time
-    when series are short and numerous (75 K groups of ~13 rows: the
-    whole operator is pandas overhead, not compute). This helper keeps
-    the same one-exchange shape but streams each partition through
-    mapInPandas as FULL Arrow batches: repartition on the keys (exempt
-    from AQE coalescing — see ``grouped_apply``), sortWithinPartitions
-    (keys + order) so groups are contiguous and pre-sorted, then numpy
-    change-point detection hands ``batch_fn`` whole batches plus group
-    boundaries. Per-group cost collapses to an index slice.
-
-    ``batch_fn(pdf, starts, ends) -> pdf_out`` processes EVERY group in
-    the batch (group g = rows starts[g]:ends[g], already sorted by
-    ``order``) and returns one DataFrame matching ``schema``. Groups
-    never span batches: the last (possibly incomplete) group of each
-    incoming Arrow batch is carried into the next one, so ``batch_fn``
-    always sees complete series — same per-task memory bound as
-    applyInPandas (one batch + one series).
+    - whole series (``carry=False``): ``batch_fn(pdf, starts, ends) ->
+      pdf_out`` sees only complete series, each exactly once. A series
+      left open at the end of a batch is kept as a list of pieces and
+      concatenated once, when it closes. Worker memory: one batch plus
+      the longest series.
+    - carry (``carry=True``): ``batch_fn(pdf, starts, ends, state) ->
+      (pdf_out, state_out)`` sees each Arrow batch as it arrives. When
+      the first series continues the one the previous batch left open,
+      ``state`` is the ``state_out`` returned for that batch, else None;
+      ``state_out`` is the state of the batch's last series. Worker
+      memory: one batch, whatever the series length.
     """
     import numpy as np
     import pandas as pd
@@ -260,23 +243,61 @@ def sorted_batch_apply(df, keys: list[str], order: list[str], batch_fn, schema):
         starts = np.flatnonzero(change)
         return starts, np.append(starts[1:], n)
 
-    def run(batches):
-        tail = None
+    def key_at(pdf, i):
+        return [pdf[k].iat[i] for k in keys]
+
+    def same(a, b):  # the `!=` group_bounds applies within a batch
+        return not any(x != y for x, y in zip(a, b))
+
+    def run_carry(batches):
+        last, state = None, None
         for pdf in batches:
-            if tail is not None and len(tail):
-                pdf = pd.concat([tail, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            if last is None or not same(last, key_at(pdf, 0)):
+                state = None
+            out, state = batch_fn(pdf, *group_bounds(pdf), state)
+            last = key_at(pdf, -1)
+            yield out
+
+    def whole(pieces):
+        one = pd.concat(pieces, ignore_index=True)
+        return batch_fn(one, np.array([0]), np.array([len(one)]))
+
+    def run_whole(batches):
+        tail = []  # pieces of the series the previous batches left open
+        for pdf in batches:
             if not len(pdf):
                 continue
             starts, ends = group_bounds(pdf)
-            tail = pdf.iloc[starts[-1]:].reset_index(drop=True)
-            if len(starts) == 1:  # whole batch is one (continuing) group
-                continue
-            # hand batch_fn ONLY the complete groups — the carried tail
-            # must never appear in its input frame
-            done = pdf.iloc[:starts[-1]].reset_index(drop=True)
-            yield batch_fn(done, starts[:-1], ends[:-1])
-        if tail is not None and len(tail):
-            starts, ends = group_bounds(tail)
-            yield batch_fn(tail, starts, ends)
+            if tail and same(key_at(tail[-1], -1), key_at(pdf, 0)):
+                tail.append(pdf.iloc[:ends[0]])
+                if len(starts) == 1:  # the open series fills the batch
+                    continue
+                starts, ends = starts[1:], ends[1:]
+            if tail:
+                yield whole(tail)
+            tail = [pdf.iloc[starts[-1]:]]
+            if len(starts) > 1:
+                lo = starts[0]
+                done = pdf.iloc[lo:starts[-1]].reset_index(drop=True)
+                yield batch_fn(done, starts[:-1] - lo, ends[:-1] - lo)
+        if tail:
+            yield whole(tail)
 
-    return d.mapInPandas(run, schema)
+    return d.mapInPandas(run_carry if carry else run_whole, schema)
+
+
+def per_series(fn):
+    """Whole-series ``batch_fn`` for :func:`sorted_batch_apply` that runs
+    a one-series pandas function ``fn(pdf) -> pdf_out`` on each series
+    (a fresh zero-based frame) and concatenates the results."""
+    import pandas as pd
+
+    def batch_fn(pdf, starts, ends):
+        return pd.concat(
+            [fn(pdf.iloc[s:e].reset_index(drop=True)) for s, e in zip(starts, ends)],
+            ignore_index=True,
+        )
+
+    return batch_fn

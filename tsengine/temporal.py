@@ -21,9 +21,11 @@ Scale shapes (the whole point — none of these is a join explosion):
 
 Skew note: all three partition their windows by the series key, so a
 mega-conversation serializes within one task — same trade as every
-per-series window in this engine; pre-split mega keys with the salted
-chunk machinery (`features.derive_features_chunked`) when a single series
-outgrows a task.
+per-series window in this engine. The Python recursions further down run
+through ``session.sorted_batch_apply``: ``kalman_filter``, ``holt_linear``
+and ``holt_winters`` carry their state across Arrow batches, so a worker
+holds one batch whatever the series length; ``ewma`` and ``brown_smooth``
+take each series whole.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from tsengine.session import grouped_apply, sorted_batch_apply
+from tsengine.session import sorted_batch_apply
 
 
 def asof_join(
@@ -188,12 +190,13 @@ def ewma(
     window aggregate cannot express without O(n²) per-row weight sums.
     Adds ``ewma`` (double).
 
-    Implementation: ``applyInPandas`` — one shuffle keyed by ``on``,
-    Arrow-batched, the recursion runs in pandas' C ewm kernel. This is
-    the documented legitimate use of the Python path (per-key recursive
-    state); everything stateless stays JVM-side. Nulls in ``value_col``
-    must be filtered/filled upstream (pandas decays weights across gaps,
-    SQL closed forms skip them — the two disagree on nulls).
+    Implementation: one ``sorted_batch_apply`` pass keyed by ``on``
+    (whole-series contract); the recursion runs in pandas' C ewm kernel
+    over each sorted series. This is the documented legitimate use of
+    the Python path (per-key recursive state); everything stateless
+    stays JVM-side. Nulls in ``value_col`` must be filtered/filled
+    upstream (pandas decays weights across gaps, SQL closed forms skip
+    them — the two disagree on nulls).
 
     Oracle note: s_t has the closed form
     (1-a)^t · [x_0 + a·Σ_{i=1..t} (1-a)^{-i} x_i], expressible as a
@@ -210,12 +213,15 @@ def ewma(
         list(df.schema.fields) + [StructField("ewma", DoubleType())]
     )
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort")
-        pdf["ewma"] = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
+    def batch_fn(pdf, starts, ends):
+        x = pdf[value_col]
+        ew = np.empty(len(pdf))
+        for s, e in zip(starts, ends):
+            ew[s:e] = x.iloc[s:e].ewm(alpha=alpha, adjust=False).mean()
+        pdf["ewma"] = ew
         return pdf
 
-    return grouped_apply(df, [on], fn, out_schema)
+    return sorted_batch_apply(df, [on], order, batch_fn, out_schema)
 
 
 def counter_increase(
@@ -480,9 +486,9 @@ def brown_smooth(
     update NIST/engineering-statistics handbooks call double exponential
     smoothing). Adds ``brown_level`` / ``brown_trend`` / ``brown_fcst``.
 
-    Implementation mirrors ``ewma``: one ``applyInPandas`` shuffle keyed
-    by ``on``, both recursions in pandas' C ewm kernel over the sorted
-    key partition — per-key recursive state is the documented legitimate
+    Implementation mirrors ``ewma``: one ``sorted_batch_apply`` pass
+    keyed by ``on``, both recursions in pandas' C ewm kernel over each
+    sorted series — per-key recursive state is the documented legitimate
     Python path. Oracle path: the prefix-sum closed form applied twice
     (s2's closed form takes s1's closed form as its input series), valid
     under the same (1−α)^(−t) range bound as ``ewma``.
@@ -504,16 +510,20 @@ def brown_smooth(
     )
     coef = alpha / (1.0 - alpha)
 
-    def fn(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort")
-        s1 = pdf[value_col].ewm(alpha=alpha, adjust=False).mean()
-        s2 = s1.ewm(alpha=alpha, adjust=False).mean()
+    def batch_fn(pdf, starts, ends):
+        x = pdf[value_col]
+        s1 = np.empty(len(pdf))
+        s2 = np.empty(len(pdf))
+        for s, e in zip(starts, ends):
+            e1 = x.iloc[s:e].ewm(alpha=alpha, adjust=False).mean()
+            s1[s:e] = e1
+            s2[s:e] = e1.ewm(alpha=alpha, adjust=False).mean()
         pdf["brown_level"] = 2.0 * s1 - s2
         pdf["brown_trend"] = coef * (s1 - s2)
         pdf["brown_fcst"] = pdf["brown_level"] + pdf["brown_trend"]
         return pdf
 
-    return grouped_apply(df, [on], fn, out_schema)
+    return sorted_batch_apply(df, [on], order, batch_fn, out_schema)
 
 
 def holt_linear(
@@ -539,12 +549,11 @@ def holt_linear(
 
     The recurrence is genuinely sequential in TWO coupled states, so
     there is no ewm/prefix-sum closed form — this is the documented
-    legitimate Python path: one ``applyInPandas`` shuffle keyed by the
-    series key, a per-group state loop inside the Arrow batch. Groups
+    legitimate Python path: one ``sorted_batch_apply`` pass keyed by
+    the series, a per-series state loop inside each Arrow batch. Series
     run in parallel across executors; a single series serializes within
-    one task — for unbounded series lengths use
-    ``chunked.holt_linear_chunked`` (bitwise-identical via the shared
-    ``_holt_seq`` core, O(chunk_rows) per-task memory).
+    one task, which carries (l, b) across Arrow batches (the carry
+    contract), so a worker holds one batch whatever the series length.
 
     Cross-engine parity: the update expressions are written in ONE
     association order and mirrored verbatim by the SQL oracle's
@@ -567,13 +576,15 @@ def holt_linear(
     a, b_gain = float(alpha), float(beta)
     one_a, one_b = 1.0 - a, 1.0 - b_gain
 
-    def batch_fn(pdf, starts, ends):
+    def batch_fn(pdf, starts, ends, state):
         y = pdf[value_col].to_numpy(dtype="float64")
         n = len(pdf)
         lv_a = np.empty(n)
         tr_a = np.empty(n)
         for s, e in zip(starts, ends):
-            lv, tr, _ = _holt_seq(y[s:e], None, a, one_a, b_gain, one_b)
+            lv, tr, state = _holt_seq(
+                y[s:e], state if s == 0 else None, a, one_a, b_gain, one_b
+            )
             lv_a[s:e] = lv
             tr_a[s:e] = tr
         out = pdf.copy(deep=False)
@@ -581,18 +592,20 @@ def holt_linear(
         out["holt_trend"] = tr_a
         # elementwise float64 add == the scalar l + b of the loop path
         out["holt_fcst"] = lv_a + tr_a
-        return out
+        return out, state
 
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, batch_fn, out_schema, carry=True
+    )
 
 
 def _holt_seq(y, state, a, one_a, b_gain, one_b):
-    """Holt linear-trend recurrence shared by ``holt_linear`` and
-    ``chunked.holt_linear_chunked`` — one copy of the float ops for
-    bitwise parity between the paths. ``state=None`` cold-starts
-    (l=y[0], b=0; the init row EMITS, matching ``holt_linear``'s
-    contract); otherwise ``state=(l, b)`` carries in and every row
-    emits. Returns ``(lv, tr, new_state)`` with one output per row."""
+    """Holt linear-trend recurrence over one slice of a series.
+    ``state=None`` cold-starts (l=y[0], b=0; the init row EMITS, matching
+    ``holt_linear``'s contract); otherwise ``state=(l, b)`` carried from
+    the previous Arrow batch and every row emits — the same float ops
+    either way, so the output does not depend on where batches break.
+    Returns ``(lv, tr, new_state)`` with one output per row."""
     n = len(y)
     lv, tr = [], []
     if state is None:
@@ -639,15 +652,15 @@ def holt_winters(
     series shorter than m+1 points emit nothing (documented contract).
 
     Same execution shape and parity rules as ``holt_linear``: one
-    ``applyInPandas`` shuffle keyed by the series (the recurrence has
-    three coupled states, no prefix-sum closed form), groups parallel
-    across executors; every update is written in ONE association order
-    mirrored by the oracle's recursive CTE, whose seasonal state rides
-    along as a DOUBLE[m] list column (slide = s[2:] ++ [s_t]) — with
-    exactly-representable gains both engines stay bitwise-identical at
-    every step. Nulls must be filtered upstream. For unbounded series
-    lengths use ``chunked.holt_winters_chunked`` (bitwise-identical via
-    the shared ``_hw_seq`` core, O(chunk_rows) per-task memory)."""
+    ``sorted_batch_apply`` pass keyed by the series (the recurrence has
+    three coupled states, no prefix-sum closed form), series parallel
+    across executors, the state — or the init buffer, while fewer than
+    m points have been seen — carried across Arrow batches, so a worker
+    holds one batch whatever the series length. Every update is written
+    in ONE association order mirrored by the oracle's recursive CTE,
+    whose seasonal state rides along as a DOUBLE[m] list column (slide =
+    s[2:] ++ [s_t]) — with exactly-representable gains both engines stay
+    bitwise-identical at every step. Nulls must be filtered upstream."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
@@ -664,7 +677,7 @@ def holt_winters(
     one_a, one_b, one_g = 1.0 - a, 1.0 - bg, 1.0 - g
     mm = int(m)
 
-    def batch_fn(pdf, starts, ends):
+    def batch_fn(pdf, starts, ends, state):
         y = pdf[value_col].to_numpy(dtype="float64")
         n = len(pdf)
         keep = np.zeros(n, dtype=bool)
@@ -673,10 +686,9 @@ def holt_winters(
         se_a = np.empty(n)
         fc_a = np.empty(n)
         for s, e in zip(starts, ends):
-            if e - s <= mm:
-                continue  # too short to init: nothing emits
-            start, lv, tr, se, fc, _ = _hw_seq(
-                y[s:e], None, a, one_a, bg, one_b, g, one_g, mm
+            start, lv, tr, se, fc, state = _hw_seq(
+                y[s:e], state if s == 0 else None,
+                a, one_a, bg, one_b, g, one_g, mm,
             )
             keep[s + start:e] = True
             lv_a[s + start:e] = lv
@@ -688,23 +700,23 @@ def holt_winters(
         out["hw_trend"] = tr_a[keep]
         out["hw_season"] = se_a[keep]
         out["hw_fcst"] = fc_a[keep]
-        return out
+        return out, state
 
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, batch_fn, out_schema, carry=True
+    )
 
 
 def _hw_seq(y, state, a, one_a, bg, one_b, g, one_g, mm):
-    """Holt-Winters additive recurrence shared by ``holt_winters`` and
-    ``chunked.holt_winters_chunked`` — one copy of the float ops for
-    bitwise parity between the paths.
+    """Holt-Winters additive recurrence over one slice of a series.
 
     State is a tuple tagged by phase: ``("init", buf)`` while fewer than
     m observations have been seen (buf = those values, in order) and
     ``("run", level, trend, season)`` afterwards. ``state=None`` starts
     a fresh init. Returns ``(start, lv, tr, se, fc, new_state)`` where
     ``start`` is the index of the first emitting row in THIS slice —
-    init consumes rows without emitting, exactly like the whole-series
-    path (output begins at global row m+1)."""
+    init consumes rows without emitting, so output begins at global row
+    m+1 wherever the Arrow batches break."""
     n = len(y)
     pos = 0
     if state is None or state[0] == "init":
@@ -957,12 +969,11 @@ def kalman_filter(
     step; only the 6-dp print needs the usual +5e-10 nudge. Nulls must
     be filtered upstream.
 
-    Shape for 100 TB: one ``applyInPandas`` shuffle keyed by the series
-    (the Riccati recursion has no prefix-sum closed form), groups
-    parallel across executors, O(1) state per series. A single task
-    holds one full series; for unbounded series lengths use
-    ``chunked.kalman_filter_chunked`` — bitwise-identical (shared
-    ``_kalman_seq`` core) with O(chunk_rows) per-task memory."""
+    Shape for 100 TB: one ``sorted_batch_apply`` pass keyed by the
+    series (the Riccati recursion has no prefix-sum closed form), series
+    parallel across executors, O(1) state per series carried across
+    Arrow batches (the carry contract), so a worker holds one batch
+    whatever the series length."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     order = [ts_col] if tiebreak is None else [ts_col, tiebreak]
@@ -978,9 +989,7 @@ def kalman_filter(
     qq, rr = float(q), float(r)
     q11, q12, q22 = 0.25 * qq, 0.5 * qq, qq
 
-    def batch_fn(pdf, starts, ends):
-        import numpy as np
-
+    def batch_fn(pdf, starts, ends, state):
         y = pdf[value_col].to_numpy(dtype="float64")
         n = len(pdf)
         keep = np.zeros(n, dtype=bool)
@@ -989,36 +998,35 @@ def kalman_filter(
         iv = np.empty(n)
         gv = np.empty(n)
         for s, e in zip(starts, ends):
-            if e - s < 2:
-                continue  # <2 points: nothing emits (same as before)
-            _, ls, vs, innovs, gains, _ = _kalman_seq(
-                y[s:e], None, q11, q12, q22, rr
+            start, ls, vs, innovs, gains, state = _kalman_seq(
+                y[s:e], state if s == 0 else None, q11, q12, q22, rr
             )
-            keep[s + 1:e] = True
-            lv[s + 1:e] = ls
-            vv[s + 1:e] = vs
-            iv[s + 1:e] = innovs
-            gv[s + 1:e] = gains
+            keep[s + start:e] = True
+            lv[s + start:e] = ls
+            vv[s + start:e] = vs
+            iv[s + start:e] = innovs
+            gv[s + start:e] = gains
         out = pdf[keep].copy()
         out["kf_level"] = lv[keep]
         out["kf_velocity"] = vv[keep]
         out["kf_innov"] = iv[keep]
         out["kf_gain"] = gv[keep]
-        return out
+        return out, state
 
-    return sorted_batch_apply(df, list(on), order, batch_fn, out_schema)
+    return sorted_batch_apply(
+        df, list(on), order, batch_fn, out_schema, carry=True
+    )
 
 
 def _kalman_seq(y, state, q11, q12, q22, rr):
-    """The constant-velocity Kalman recurrence, shared by the per-series
-    batch path (``kalman_filter``) and the chunked carry-in path
-    (``chunked.kalman_filter_chunked``) — ONE copy of the float
-    expressions, so the two paths are bitwise-identical by construction.
+    """The constant-velocity Kalman recurrence over one slice of a series
+    — ONE copy of the float expressions, so the output does not depend
+    on where Arrow batches break the series.
 
     ``state=None`` is a cold start: y[0] is consumed as the init
     observation (level=y[0], velocity=0, P=I) and emits nothing.
     Otherwise ``state=(l, v, p11, p12, p22)`` carried from the previous
-    chunk and every row emits. Returns
+    Arrow batch and every row emits. Returns
     ``(start, ls, vs, innovs, gains, new_state)`` where ``start`` is the
     index of the first emitting row."""
     n = len(y)
@@ -1539,8 +1547,8 @@ def forecast_metrics(
     The Holt recursion is bitwise-identical cross-engine (binary-fraction
     gains, same association order), so every error term is an identical
     double; only the ≤n-term metric sums are float-order sensitive
-    (round + nudge). One applyInPandas pass for the recursion (same as
-    holt_linear), one lag window over its output, one groupBy.
+    (round + nudge). One sorted_batch_apply pass for the recursion
+    (holt_linear), one lag window over its output, one groupBy.
     """
     out = holt_linear(df, alpha=alpha, beta=beta, on=on, tiebreak="event_id")
     w = W.partitionBy(*on).orderBy("ts", "event_id")
