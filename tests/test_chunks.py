@@ -5,8 +5,25 @@ from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
+from pyspark.errors import PythonException
 
-from tsengine import chunks, features, gapfill
+from tsengine import chunks, codec, features, gapfill
+
+
+def _assert_stored_format(chunk_df):
+    """Every blob is exactly what the per-blob reference encoders make
+    of its own decoded points, under the one stored codec pair."""
+    rows = chunk_df.toPandas()
+    assert len(rows) > 0
+    assert (rows["ts_codec"] == "dodblk").all()
+    assert (rows["val_codec"] == "xorblk").all()
+    for r in rows.itertuples():
+        ts, _ = codec.dodblk_decode_many([bytes(r.ts_blob)])
+        vals, _ = codec.xorblk_decode_many([bytes(r.val_blob)])
+        assert len(ts) == len(vals) == r.n
+        assert bytes(r.ts_blob) == codec.dodblk_encode(ts)
+        assert bytes(r.val_blob) == codec.xorblk_encode(vals)
 
 
 def test_chunk_roundtrip(spark, transcripts):
@@ -36,6 +53,23 @@ def test_chunk_roundtrip(spark, transcripts):
     )
     # n bookkeeping
     assert enc.agg(F.sum("n")).first()[0] == len(a)
+
+    # a blob tagged with any other codec fails loudly, naming the tag,
+    # in both readers
+    r0 = enc.orderBy("conv_id", "chunk_start").first()
+    bad = enc.withColumn(
+        "val_codec",
+        F.when(
+            (F.col("conv_id") == r0["conv_id"])
+            & (F.col("chunk_start") == F.lit(r0["chunk_start"])),
+            F.lit("gorilla"),
+        ).otherwise(F.col("val_codec")),
+    )
+    assert bad.where(F.col("val_codec") == "gorilla").count() == 1
+    with pytest.raises(PythonException, match="ValueError: unsupported val_codec 'gorilla'"):
+        chunks.decode_chunks(bad).count()
+    with pytest.raises(PythonException, match="ValueError: unsupported val_codec 'gorilla'"):
+        chunks.compact_chunks(bad).count()
 
 
 def test_chunk_bounds_and_stats(spark, transcripts):
@@ -96,6 +130,9 @@ def test_compact_chunks_lossless_and_fewer_blobs(spark, transcripts):
     mm_d = daily.agg(F.min("v_min"), F.max("v_max")).first()
     mm_w = weekly.agg(F.min("v_min"), F.max("v_max")).first()
     assert mm_d == mm_w
+    # the stored bytes of both generations are the reference encoding
+    _assert_stored_format(daily)
+    _assert_stored_format(weekly)
 
 
 def test_decode_range_prunes_and_keeps_bounds(spark, transcripts):

@@ -109,6 +109,23 @@ def test_moments_drop_degenerate_series(spark):
     assert indicators.moments(df).count() == 0
 
 
+def test_moments_skip_null_and_nan(spark):
+    # a null or NaN value is skipped by the power sums AND by the count:
+    # the series gives exactly the row it gives without that value
+    base = [float(v) for v in RNG.gamma(2.0, 3.0, size=50)]
+    rows = []
+    for conv, extra in (("clean", []), ("null", [None]), ("nan", [float("nan")])):
+        vals = base[:20] + extra + base[20:]
+        rows += [(conv, "m", i, v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, metric string, ts long, value double"
+    )
+    got = indicators.moments(df).toPandas().set_index("conv_id")
+    assert got.loc["clean", "n_obs"] == 50
+    for conv in ("null", "nan"):
+        assert got.loc[conv].tolist() == got.loc["clean"].tolist(), conv
+
+
 def test_moments_shift_invariance(spark):
     # identical shape at a huge offset: the min-shift keeps skew/kurt
     # stable where raw power sums would cancel catastrophically

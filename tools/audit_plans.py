@@ -15,6 +15,7 @@ from __future__ import annotations
 import io
 import os
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -316,17 +317,19 @@ def main() -> None:
               to_span="7d"),
           ["no_cartesian"])
     # range read from a STORED chunk table: the chunk_start prune must
-    # reach the parquet scan (row-group min/max stats skip whole blobs)
-    chunk_store = "/tmp/tsengine_audit_chunks"
-    chunks_mod.encode_chunks(
-        gapfill.gapfill_sql(ev.where(F.col("metric") == "view"), "1h", "ffill"),
-        ts_col="bucket_ts", chunk_span="1d",
-    ).write.mode("overwrite").parquet(chunk_store)
-    audit("chunk range read (chunk_start pushdown)",
-          chunks_mod.decode_range(
-              spark.read.parquet(chunk_store),
-              "2024-01-10 00:00:00", "2024-01-20 23:59:59", chunk_span="1d"),
-          ["pushed_filters", "no_cartesian"])
+    # reach the parquet scan (row-group min/max stats skip whole blobs);
+    # the table lives only as long as this audit
+    with tempfile.TemporaryDirectory(prefix="tsengine_audit_") as tmp:
+        chunk_store = os.path.join(tmp, "chunks")
+        chunks_mod.encode_chunks(
+            gapfill.gapfill_sql(ev.where(F.col("metric") == "view"), "1h", "ffill"),
+            ts_col="bucket_ts", chunk_span="1d",
+        ).write.parquet(chunk_store)
+        audit("chunk range read (chunk_start pushdown)",
+              chunks_mod.decode_range(
+                  spark.read.parquet(chunk_store),
+                  "2024-01-10 00:00:00", "2024-01-20 23:59:59", chunk_span="1d"),
+              ["pushed_filters", "no_cartesian"])
     # continuous-aggregate refresh: the merge is a tier-row re-aggregation
     # with map-side combine — never a raw re-read
     cutoff = F.lit("2024-01-25 00:00:00").cast("timestamp")

@@ -1,10 +1,12 @@
 """Chunk blob encode/decode — the compressed storage layer (SURVEY §2.8).
 
 Series are packed into per-(conv_id, metric, time-chunk) blobs: timestamps
-via delta-of-delta, values via Gorilla-XOR (codec.py). The grouped-map UDF
-is the engine's analog of rewemo's per-series CSV sink
-(`ncep/timeseries_tools.py:392-404`) — one output unit per series — but
-compressed, columnar-addressable, and parallel.
+via delta-of-delta, values via XOR-of-prior — codec.py's ``dodblk`` /
+``xorblk`` pair, the one stored format, whose tags every row carries in
+``ts_codec`` / ``val_codec``. The chunk table is the engine's analog of
+rewemo's per-series CSV sink (`ncep/timeseries_tools.py:392-404`) — one
+output unit per series — but compressed, columnar-addressable, and
+parallel.
 
 Skew design (SURVEY §7 hard-part (e)): chunking is TIME-BASED, not
 row-count-based. ``chunk_start = floor(ts, chunk_span)`` is a pure column
@@ -35,7 +37,14 @@ CHUNK_SPANS = {"1h": "hour", "1d": "day"}
 
 CHUNK_SPAN_SECONDS = {"1h": 3600, "1d": 86400}
 
+# the stored format tags (schema.CHUNKS ts_codec / val_codec)
+TS_CODEC = "dodblk"
+VAL_CODEC = "xorblk"
 
+# consecutive chunks per encode shuffle group, and compact windows per
+# compaction shuffle group (see encode_chunks / compact_chunks)
+ENCODE_SALT_CHUNKS = 256
+COMPACT_SALT_SPANS = 64
 
 _CHUNK_COLS = [
     "conv_id", "metric", "chunk_start", "n", "ts_codec",
@@ -43,55 +52,23 @@ _CHUNK_COLS = [
 ]
 
 
-def _run_bounds(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Start/end indices of equal-value runs in a sorted key array — the
-    vectorized window split shared by encode and compaction (one Arrow
-    group spans many chunks; per-chunk pandas groupby overhead dominated
-    encode ~2× before this)."""
-    starts = np.flatnonzero(np.r_[True, arr[1:] != arr[:-1]])
-    return starts, np.r_[starts[1:], len(arr)]
+def _run_starts(keys: np.ndarray, g_starts) -> np.ndarray:
+    """Start rows of the runs of equal ``keys`` in a sorted batch: a run
+    starts at every group start and wherever the key changes."""
+    change = np.zeros(len(keys), dtype=bool)
+    change[g_starts] = True
+    change[1:] |= keys[1:] != keys[:-1]
+    return np.flatnonzero(change)
 
 
-def _blob_row(conv, metric, start, ts_all, val_all, ts_codec: str, val_codec: str):
-    """One encoded CHUNKS row from raw int64-ns timestamps + float64 values
-    (shared by encode_chunks and compact_chunks so the finite-min/max and
-    codec-call conventions cannot drift apart)."""
-    finite = val_all[np.isfinite(val_all)]
-    return (
-        conv,
-        metric,
-        start,
-        len(val_all),
-        ts_codec,
-        val_codec,
-        TS_CODECS_ENC[ts_codec](ts_all),
-        CODECS_ENC[val_codec](val_all),
-        float(finite.min()) if len(finite) else None,
-        float(finite.max()) if len(finite) else None,
-    )
-
-
-def _blob_frame(rows) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=_CHUNK_COLS)
-    # tuples carry np.datetime64 scalars → object dtype; restore the
-    # timestamp dtype Arrow expects
-    out["chunk_start"] = pd.to_datetime(out["chunk_start"])
-    return out
-
-
-TS_CODECS_ENC = {k: v[0] for k, v in codec.TS_CODECS.items()}
-CODECS_ENC = {k: v[0] for k, v in codec.CODECS.items()}
-
-
-def _blob_frame_arrays(
+def _chunk_frame(
     conv, metric, chunk_start, starts, ends, ts_all, val_all,
-    ts_codec: str, val_codec: str,
 ) -> pd.DataFrame:
-    """Column-wise CHUNKS frame for contiguous blob slices — the batch
-    twin of per-blob ``_blob_row`` + ``_blob_frame``: blob payloads via
-    the vectorized many-slice encoders, finite min/max via masked
-    ``reduceat`` (NaN where a blob has no finite value, which is exactly
-    how the tuple path's ``None`` lands in the double column)."""
+    """CHUNKS frame with one blob per contiguous point slice
+    [starts[i], ends[i]) of ``ts_all`` / ``val_all``: blob payloads via the
+    many-slice encoders, finite min/max via masked ``reduceat`` (NaN where
+    a blob has no finite value, which lands as null in the double
+    column)."""
     finite = np.isfinite(val_all)
     vm = np.where(finite, val_all, np.nan)
     n_finite = np.add.reduceat(finite.astype(np.int64), starts)
@@ -102,22 +79,38 @@ def _blob_frame_arrays(
         "metric": metric,
         "chunk_start": pd.to_datetime(chunk_start),
         "n": (ends - starts).astype(np.int64),
-        "ts_codec": ts_codec,
-        "val_codec": val_codec,
-        "ts_blob": codec.TS_CODECS_ENC_MANY[ts_codec](ts_all, starts, ends),
-        "val_blob": codec.CODECS_ENC_MANY[val_codec](val_all, starts, ends),
+        "ts_codec": TS_CODEC,
+        "val_codec": VAL_CODEC,
+        "ts_blob": codec.dodblk_encode_many(ts_all, starts, ends),
+        "val_blob": codec.xorblk_encode_many(val_all, starts, ends),
         "v_min": v_min,
         "v_max": v_max,
     }, columns=_CHUNK_COLS)
+
+
+def _decode_blobs(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A batch of CHUNKS rows → (concatenated int64-ns timestamps,
+    concatenated float64 values, per-blob point counts). Blobs come from
+    storage, outside the program, so a row tagged with any other codec
+    raises instead of being read as this one."""
+    for col, want in (("ts_codec", TS_CODEC), ("val_codec", VAL_CODEC)):
+        other = set(pdf[col].unique().tolist()) - {want}
+        if other:
+            raise ValueError(
+                f"unsupported {col} {', '.join(sorted(map(repr, other)))}: "
+                f"chunk blobs must be {want!r}"
+            )
+    ts_all, _ = codec.dodblk_decode_many([bytes(b) for b in pdf["ts_blob"]])
+    val_all, counts = codec.xorblk_decode_many(
+        [bytes(b) for b in pdf["val_blob"]]
+    )
+    return ts_all, val_all, counts
 
 
 def encode_chunks(
     series: DataFrame,
     ts_col: str = "bucket_ts",
     chunk_span: str = "1d",
-    value_codec: str = "xorblk",
-    ts_codec: str = "dodblk",
-    salt_chunks: int = 256,
 ) -> DataFrame:
     """(conv_id, metric, ts, value) rows → chunk blobs (schema.CHUNKS).
 
@@ -126,62 +119,37 @@ def encode_chunks(
     are all zero → ~2 bytes per 128 points.
 
     Grouping granularity: the SHUFFLE key is (conv_id, metric, salt) where
-    salt spans ``salt_chunks`` consecutive chunks; the chunk split happens
-    INSIDE the UDF via pandas groupby. One Arrow group per chunk would pay
-    ~1 ms of Arrow/pandas overhead per chunk (measured ~10× slower at 40 K
-    chunks); one group per salt amortizes it over up to ``salt_chunks``
-    chunks while still bounding group size (salt_chunks × span/grid-step
+    the salt spans ``ENCODE_SALT_CHUNKS`` (256) consecutive chunks; the
+    chunk split happens inside each Arrow batch at sorted run boundaries,
+    and every chunk of the batch encodes in one many-slice pass. One group
+    per chunk would pay ~1 ms of Arrow/pandas overhead per chunk (measured
+    ~10× slower at 40 K chunks); one group per salt amortizes it over up
+    to 256 chunks while still bounding group size (256 × span/grid-step
     rows) so mega-series can't OOM a task."""
-    venc = codec.CODECS[value_codec][0]
-    tenc = codec.TS_CODECS[ts_codec][0]
     unit = CHUNK_SPANS[chunk_span]
     span_s = CHUNK_SPAN_SECONDS[chunk_span]
-    batch_codecs = (
-        value_codec in codec.CODECS_ENC_MANY
-        and ts_codec in codec.TS_CODECS_ENC_MANY
-    )
 
     def batch_enc(pdf: pd.DataFrame, g_starts, g_ends) -> pd.DataFrame:
-        # chunk-boundary detection over the whole sorted batch instead of a
-        # pandas groupby iterator: chunks are ~24 rows at 1d spans over
-        # hourly grids, and per-group pandas overhead dominated encode
-        # (rows arrive sorted by key + ts from sorted_batch_apply); with
-        # the default codecs even the per-CHUNK codec pipelines collapse
-        # into one vectorized pass per batch (codec.*_encode_many)
+        # rows arrive sorted by key + ts from sorted_batch_apply: a new
+        # chunk starts at every group start and every chunk_start change
         cs_all = pdf["chunk_start"].to_numpy()
-        ts_all = pdf[ts_col].astype("int64").to_numpy()
-        val_all = pdf["value"].to_numpy(dtype=np.float64)
-        conv_all = pdf["conv_id"].to_numpy()
-        met_all = pdf["metric"].to_numpy()
-        if not batch_codecs:
-            rows = []
-            for gs, ge in zip(g_starts, g_ends):
-                starts, ends = _run_bounds(cs_all[gs:ge])
-                rows.extend(
-                    _blob_row(conv_all[gs], met_all[gs], cs_all[gs + s],
-                              ts_all[gs + s:gs + e], val_all[gs + s:gs + e],
-                              ts_codec, value_codec)
-                    for s, e in zip(starts, ends)
-                )
-            return _blob_frame(rows)
-        # global chunk runs: a new chunk starts at every group start and at
-        # every chunk_start change within a group
-        n = len(pdf)
-        change = np.zeros(n, dtype=bool)
-        change[g_starts] = True
-        change[1:] |= cs_all[1:] != cs_all[:-1]
-        cstarts = np.flatnonzero(change)
-        cends = np.append(cstarts[1:], n)
-        return _blob_frame_arrays(
-            conv_all[cstarts], met_all[cstarts], cs_all[cstarts],
-            cstarts, cends, ts_all, val_all, ts_codec, value_codec,
+        cstarts = _run_starts(cs_all, g_starts)
+        return _chunk_frame(
+            pdf["conv_id"].to_numpy()[cstarts],
+            pdf["metric"].to_numpy()[cstarts],
+            cs_all[cstarts],
+            cstarts,
+            np.append(cstarts[1:], len(pdf)),
+            pdf[ts_col].astype("int64").to_numpy(),
+            pdf["value"].to_numpy(dtype=np.float64),
         )
 
     keyed = series.withColumn(
         "chunk_start", F.date_trunc(unit, F.col(ts_col))
     ).withColumn(
         "_salt",
-        (F.col("chunk_start").cast("long") / (span_s * salt_chunks)).cast("long"),
+        (F.col("chunk_start").cast("long") / (span_s * ENCODE_SALT_CHUNKS))
+        .cast("long"),
     ).select(
         # only what the encoder touches crosses the Arrow boundary —
         # mapInPandas is opaque to column pruning, extra input columns
@@ -199,47 +167,18 @@ DECODED_SCHEMA = "conv_id string, metric string, bucket_ts timestamp, value doub
 def decode_chunks(chunks_df: DataFrame) -> DataFrame:
     """Inverse: chunk blobs → point rows. mapInPandas (not grouped) — each
     blob row is self-contained, so decode needs NO shuffle at all; Spark
-    streams Arrow batches of blobs through the workers."""
+    streams Arrow batches of blobs through the workers. Raises
+    ``ValueError`` on a row whose codec tags are not ``dodblk`` /
+    ``xorblk``."""
 
     def dec(batches):
         for pdf in batches:
-            n_blobs = len(pdf)
-            if n_blobs == 0:
+            if len(pdf) == 0:
                 continue
             # everything frame-shaped happens ONCE per Arrow batch: one
-            # repeat for the keys, one concatenate per column, one
-            # to_datetime over the whole int64-ns array, one DataFrame.
-            # (The old per-blob pd.DataFrame + pd.concat dominated decode
-            # cost ~2x at bench scale.) With the default codecs even the
-            # per-blob bitstream walks collapse: the *_decode_many twins
-            # decode the whole batch's payload bits in one vectorized
-            # gather (codec.py), leaving only a cheap header walk per blob.
-            ts_codecs = pdf["ts_codec"].to_numpy()
-            val_codecs = pdf["val_codec"].to_numpy()
-            ts_blobs = pdf["ts_blob"].to_numpy()
-            val_blobs = pdf["val_blob"].to_numpy()
-            tnames = set(ts_codecs.tolist())
-            vnames = set(val_codecs.tolist())
-            if (len(tnames) == 1 and len(vnames) == 1
-                    and tnames <= set(codec.TS_CODECS_DEC_MANY)
-                    and vnames <= set(codec.CODECS_DEC_MANY)):
-                ts_all, _tc = codec.TS_CODECS_DEC_MANY[next(iter(tnames))](
-                    [bytes(b) for b in ts_blobs])
-                val_all, counts = codec.CODECS_DEC_MANY[next(iter(vnames))](
-                    [bytes(b) for b in val_blobs])
-            else:
-                ts_parts: list[np.ndarray] = []
-                val_parts: list[np.ndarray] = []
-                counts = np.empty(n_blobs, dtype=np.int64)
-                for i in range(n_blobs):
-                    tdec = codec.TS_CODECS[ts_codecs[i]][1]
-                    vdec = codec.CODECS[val_codecs[i]][1]
-                    ts_parts.append(tdec(bytes(ts_blobs[i])))
-                    vals = vdec(bytes(val_blobs[i]))
-                    val_parts.append(vals)
-                    counts[i] = len(vals)
-                ts_all = np.concatenate(ts_parts)
-                val_all = np.concatenate(val_parts)
+            # batch decode per column, one repeat for the keys, one
+            # to_datetime over the whole int64-ns array, one DataFrame
+            ts_all, val_all, counts = _decode_blobs(pdf)
             yield pd.DataFrame(
                 {
                     "conv_id": np.repeat(pdf["conv_id"].to_numpy(), counts),
@@ -269,11 +208,7 @@ def chunk_stats(chunks_df: DataFrame) -> DataFrame:
 COMPACT_UNITS = {"1d": "day", "7d": "week", "1mo": "month"}
 
 
-def compact_chunks(
-    chunks_df: DataFrame,
-    to_span: str = "7d",
-    salt_spans: int = 64,
-) -> DataFrame:
+def compact_chunks(chunks_df: DataFrame, to_span: str = "7d") -> DataFrame:
     """Merge a series' consecutive chunk blobs into coarser-span blobs —
     the retention-side compaction job (TimescaleDB ``compress_chunk``
     rewrite / Gorilla block merge): after a day's fine-grained 1h/1d
@@ -282,8 +217,8 @@ def compact_chunks(
     points, and time-range pruning keeps working through the coarser
     ``chunk_start`` min/max stats.
 
-    The decode→concatenate→re-encode happens INSIDE the grouped UDF on
-    blob rows — raw points never shuffle (the exchange moves compressed
+    The decode→concatenate→re-encode happens inside ``sorted_batch_apply``
+    on blob rows — raw points never shuffle (the exchange moves compressed
     blobs, ~raw/compression_ratio bytes) and never touch the source
     table. Blobs merge in ``chunk_start`` order; each blob's points are
     already time-sorted by ``encode_chunks``, so the merged stream is
@@ -291,94 +226,47 @@ def compact_chunks(
     ``decode_chunks(compact_chunks(x)) ≡ decode_chunks(x)`` bit-for-bit
     (oracle-checked by ``ts_chunk_compact``).
 
-    Group size is bounded by ``salt_spans`` compact windows of
-    to_span/grid-step points per (conv, metric) — e.g. 64 weeks of 1m
+    Group size is bounded by ``COMPACT_SALT_SPANS`` (64) compact windows
+    of to_span/grid-step points per (conv, metric) — e.g. 64 weeks of 1m
     grid = 645 K points — so mega-series stay task-sized for the same
     reason ``encode_chunks``' time-based chunking bounds them, while the
-    window split inside the UDF (sorted run boundaries, one slice per
-    window) keeps Arrow per-group overhead amortized. Mixed input codecs per group are
-    fine (each blob decodes with its own registered codec); the output
-    blob uses the FIRST blob's codec pair.
+    window split inside each Arrow batch (sorted run boundaries) keeps
+    per-group overhead amortized. Raises ``ValueError`` on a row whose
+    codec tags are not ``dodblk`` / ``xorblk``.
     """
     unit = COMPACT_UNITS[to_span]
 
     def batch_merge(pdf: pd.DataFrame, g_starts, g_ends) -> pd.DataFrame:
-        # same amortization trick as encode_chunks: the window split
-        # happens via sorted run boundaries over the whole batch (rows
-        # arrive sorted by key + (compact_start, chunk_start)), so
-        # per-group pandas/Arrow overhead amortizes across every window
-        # in the batch instead of one (measured 60 s -> ~2 s at sf0.1
-        # with one-window groups, then batch-level again on top); the
-        # re-encode of every window whose output codec pair is a default
-        # one runs as ONE vectorized many-slice pass (codec.*_encode_many)
+        # rows arrive sorted by key + (compact_start, chunk_start), so ONE
+        # batch decode of every input blob yields the points in window
+        # order and each output window is a contiguous POINT slice; one
+        # batch re-encode emits all windows (measured 60 s -> ~2 s at
+        # sf0.1 against one-window groups, then batch-level on top)
         cs_all = pdf["compact_start"].to_numpy()
-        ts_codecs = pdf["ts_codec"].to_numpy()
-        val_codecs = pdf["val_codec"].to_numpy()
-        ts_blobs = pdf["ts_blob"].to_numpy()
-        val_blobs = pdf["val_blob"].to_numpy()
-        conv_all = pdf["conv_id"].to_numpy()
-        met_all = pdf["metric"].to_numpy()
-        # fully-vectorized fast path when the whole batch carries the
-        # default codec pair (the encode_chunks output shape): ONE batch
-        # decode of every input blob — the rows arrive sorted by
-        # key + (compact_start, chunk_start), so the decoded point stream
-        # is already in window order and each output window is a
-        # contiguous POINT slice; one batch re-encode emits all windows
-        tnames = set(ts_codecs.tolist())
-        vnames = set(val_codecs.tolist())
-        if (len(tnames) == 1 and len(vnames) == 1
-                and tnames <= set(codec.TS_CODECS_DEC_MANY)
-                and vnames <= set(codec.CODECS_DEC_MANY)
-                and tnames <= set(codec.TS_CODECS_ENC_MANY)
-                and vnames <= set(codec.CODECS_ENC_MANY)):
-            tsc, vc = next(iter(tnames)), next(iter(vnames))
-            ts_cat, _tc = codec.TS_CODECS_DEC_MANY[tsc](
-                [bytes(b) for b in ts_blobs])
-            val_cat, vcnt = codec.CODECS_DEC_MANY[vc](
-                [bytes(b) for b in val_blobs])
-            blob_pt_start = np.cumsum(vcnt) - vcnt
-            n = len(pdf)
-            change = np.zeros(n, dtype=bool)
-            change[g_starts] = True
-            change[1:] |= cs_all[1:] != cs_all[:-1]
-            wstarts = np.flatnonzero(change)  # blob-row space
-            pt_starts = blob_pt_start[wstarts]
-            pt_ends = np.append(pt_starts[1:], int(vcnt.sum()))
-            return _blob_frame_arrays(
-                conv_all[wstarts], met_all[wstarts], cs_all[wstarts],
-                pt_starts, pt_ends,
-                ts_cat.astype("int64"), val_cat.astype(np.float64),
-                tsc, vc,
-            )
-        rows = []
-        for gs, ge in zip(g_starts, g_ends):
-            starts, ends = _run_bounds(cs_all[gs:ge])
-            for s, e in zip(starts, ends):
-                s, e = gs + s, gs + e
-                ts_all = np.concatenate(
-                    [codec.TS_CODECS[ts_codecs[i]][1](bytes(ts_blobs[i]))
-                     for i in range(s, e)]
-                ).astype("int64")
-                val_all = np.concatenate(
-                    [codec.CODECS[val_codecs[i]][1](bytes(val_blobs[i]))
-                     for i in range(s, e)]
-                ).astype(np.float64)
-                rows.append(
-                    _blob_row(conv_all[s], met_all[s], cs_all[s], ts_all,
-                              val_all, ts_codecs[s], val_codecs[s])
-                )
-        return _blob_frame(rows)
+        ts_cat, val_cat, vcnt = _decode_blobs(pdf)
+        wstarts = _run_starts(cs_all, g_starts)  # blob-row space
+        pt_starts = (np.cumsum(vcnt) - vcnt)[wstarts]
+        return _chunk_frame(
+            pdf["conv_id"].to_numpy()[wstarts],
+            pdf["metric"].to_numpy()[wstarts],
+            cs_all[wstarts],
+            pt_starts,
+            np.append(pt_starts[1:], int(vcnt.sum())),
+            ts_cat,
+            val_cat,
+        )
 
     span_hint_s = {"1d": 86400, "7d": 7 * 86400, "1mo": 31 * 86400}[to_span]
     keyed = chunks_df.withColumn(
         "compact_start", F.date_trunc(unit, F.col("chunk_start"))
     ).withColumn(
         # any deterministic function of compact_start works as the shuffle
-        # key (all blobs of one window must share it); spanning ~salt_spans
-        # windows per Arrow group amortizes the per-group overhead while
-        # keeping group size bounded at salt_spans x points-per-window
+        # key (all blobs of one window must share it); spanning
+        # ~COMPACT_SALT_SPANS windows per group amortizes the per-group
+        # overhead while keeping group size bounded at that many windows
         "_salt",
-        (F.col("compact_start").cast("long") / F.lit(span_hint_s * salt_spans))
+        (F.col("compact_start").cast("long")
+         / F.lit(span_hint_s * COMPACT_SALT_SPANS))
         .cast("long"),
     )
     # blob rows are ~compression× smaller than the points they carry, so

@@ -1,27 +1,27 @@
-"""Gorilla XOR float compression + delta-of-delta timestamp compression.
+"""Chunk blob codecs: delta-of-delta timestamps and XOR-coded float values.
 
-Implements the two codecs from the Facebook Gorilla paper (Pelkonen et al.,
-VLDB 2015 — public literature; no reference-repo analog, rewemo stores raw
-CSV, `ncep/timeseries_tools.py:392-404`):
+After the Facebook Gorilla paper (Pelkonen et al., VLDB 2015): a timestamp
+is stored as the delta of its delta, a value as the XOR with its
+predecessor. Bit widths are fixed per ``BLOCK`` values (block header:
+trailing-zero count and meaningful width, then a one-bit-per-value zero
+bitmap and the fixed-width payload of the nonzero entries), so both
+directions are numpy array ops with no per-value Python, and every block
+decodes on its own.
 
-1. ``gorilla`` / ``dod`` — the classic variable-length bitstreams, bit-exact
-   per the paper. Encode/decode are inherently sequential (each value's
-   control bits depend on the previous window state), so these run as tight
-   Python-int bit loops — correct, used for parity tests and
-   interoperability, NOT the hot path.
+There is one codec pair, stored under the tags ``dodblk`` (timestamps) and
+``xorblk`` (values):
 
-2. ``xorblk`` / ``dodblk`` — vectorization-friendly block variants, the
-   production path. Same XOR-of-prior / delta-of-delta cores, but bit
-   widths are fixed per 128-value block (per-block header: leading-zero
-   count + meaningful width), which makes BOTH encode and decode pure numpy
-   array ops (unpackbits/packbits bit-matrix shuffles) — no per-row Python,
-   O(n) with small constants, and blocks are independently decodable
-   (random access within a chunk). Compression is within a few % of classic
-   Gorilla on smooth series and better on noisy ones.
+- ``dodblk_encode_many`` / ``xorblk_encode_many`` encode every slice of a
+  batch (one blob per slice) in one vectorized pass;
+- ``dodblk_decode_many`` / ``xorblk_decode_many`` decode a batch of blobs
+  into one concatenated array plus per-blob counts.
 
-All functions operate on numpy arrays; chunks.py wraps them in grouped-map
-UDFs. Round-trip is bit-exact for every float64 including NaN/±0/denormals
-(property-tested in tests/test_codec.py).
+chunks.py calls them once per Arrow batch. ``dodblk_encode`` /
+``xorblk_encode`` encode one blob; the engine does not call them, they are
+the reference the batch encoders are tested against bit for bit.
+Round-trip is bit-exact for every float64 including NaN payloads, ±0 and
+denormals, and for every int64 (property-tested in tests/test_codec.py).
+A blob with the wrong magic raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -48,49 +48,35 @@ def _pack_fixed(vals: np.ndarray, width: int) -> bytes:
     return np.packbits(bits.ravel()).tobytes()
 
 
-def _unpack_fixed(buf: bytes, n: int, width: int) -> np.ndarray:
-    """Inverse of _pack_fixed → uint64 array with values in low bits."""
-    if width == 0 or n == 0:
-        return np.zeros(n, dtype=_U64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))[: n * width]
-    full = np.zeros((n, 64), dtype=np.uint8)
-    full[:, :width] = bits.reshape(n, width)
-    be = np.packbits(full.ravel()).reshape(n, 8)
-    return be.copy().view(">u8").ravel().astype(_U64) >> _U64(64 - width)
-
-
 def _nbytes(n_values: int, width: int) -> int:
     return (n_values * width + 7) // 8
 
 
 # --------------------------------------------------------------------------
-# xorblk — vectorized block-adaptive XOR float codec (production path)
+# per-blob reference encoders (the stored format, one blob at a time)
 # --------------------------------------------------------------------------
 
 _XORBLK_MAGIC = b"XB1\x00"
 
 
-def xorblk_encode(values: np.ndarray, block: int = BLOCK) -> bytes:
+def xorblk_encode(values: np.ndarray) -> bytes:
     """float64 array → XOR-of-prior, per-block fixed-width bit packing."""
     v = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
     n = len(v)
-    out = [struct.pack("<4sIH", _XORBLK_MAGIC, n, block)]
+    out = [struct.pack("<4sIH", _XORBLK_MAGIC, n, BLOCK)]
     if n == 0:
         return b"".join(out)
     x = np.empty_like(v)
     x[0] = v[0]
     np.bitwise_xor(v[1:], v[:-1], out=x[1:])
-    for lo in range(0, n, block):
-        xb = x[lo : lo + block]
+    for lo in range(0, n, BLOCK):
+        xb = x[lo : lo + BLOCK]
         nzmask = xb != 0
         nz = xb[nzmask]
         if len(nz) == 0:
             out.append(struct.pack("<BB", 0, 0))
             continue
-        # min-of-clz == clz-of-OR (and likewise ctz): one reduce + O(1)
-        # Python int ops instead of two vectorized bit-scan loops — cuts
-        # per-call cost ~3x on the small blocks that dominate real chunk
-        # tables (e.g. 24-row day-chunks of an hourly grid)
+        # min-of-clz == clz-of-OR (and likewise ctz)
         m = int(np.bitwise_or.reduce(nz))
         lead = 64 - m.bit_length()
         trail = (m & -m).bit_length() - 1
@@ -104,43 +90,55 @@ def xorblk_encode(values: np.ndarray, block: int = BLOCK) -> bytes:
     return b"".join(out)
 
 
-def xorblk_decode(buf: bytes) -> np.ndarray:
-    magic, n, block = struct.unpack_from("<4sIH", buf, 0)
-    assert magic == _XORBLK_MAGIC, "bad xorblk blob"
-    pos = 10
-    x = np.empty(n, dtype=_U64)
-    for lo in range(0, n, block):
-        cnt = min(block, n - lo)
-        trail, width = struct.unpack_from("<BB", buf, pos)
-        pos += 2
-        if width == 0:
-            x[lo : lo + cnt] = 0
+_DODBLK_MAGIC = b"DB1\x00"
+
+
+def _zigzag(x: np.ndarray) -> np.ndarray:
+    x = x.astype(np.int64, copy=False)
+    return ((x << 1) ^ (x >> 63)).view(np.uint64)
+
+
+def _unzigzag(u: np.ndarray) -> np.ndarray:
+    u = u.astype(_U64, copy=False)
+    return ((u >> _U64(1)).view(np.int64)) ^ -((u & _U64(1)).view(np.int64))
+
+
+def dodblk_encode(ts: np.ndarray) -> bytes:
+    """int64 array (epoch units) → first value + first delta raw, then
+    zigzagged delta-of-deltas in per-block fixed width. On a gap-filled
+    regular grid the dods are all zero → ~2 bytes/block."""
+    t = np.ascontiguousarray(ts, dtype=np.int64)
+    n = len(t)
+    head = struct.pack("<4sIH", _DODBLK_MAGIC, n, BLOCK)
+    if n == 0:
+        return head
+    if n == 1:
+        return head + struct.pack("<q", t[0])
+    d = np.diff(t)
+    dod = np.diff(d)
+    z = _zigzag(dod)
+    out = [head, struct.pack("<qq", t[0], d[0])]
+    for lo in range(0, len(z), BLOCK):
+        zb = z[lo : lo + BLOCK]
+        nzmask = zb != 0
+        nz = zb[nzmask]
+        if len(nz) == 0:
+            out.append(struct.pack("<B", 0))
             continue
-        bm_bytes = (cnt + 7) // 8
-        nzmask = np.unpackbits(
-            np.frombuffer(buf[pos : pos + bm_bytes], dtype=np.uint8)
-        )[:cnt].astype(bool)
-        pos += bm_bytes
-        nnz = int(nzmask.sum())
-        nb = _nbytes(nnz, width)
-        blk = np.zeros(cnt, dtype=_U64)
-        blk[nzmask] = _unpack_fixed(buf[pos : pos + nb], nnz, width) << _U64(trail)
-        x[lo : lo + cnt] = blk
-        pos += nb
-    v = np.bitwise_xor.accumulate(x)
-    return v.view(np.float64)
+        width = int(nz.max()).bit_length()
+        out.append(struct.pack("<B", width))
+        out.append(np.packbits(nzmask).tobytes())
+        out.append(_pack_fixed(nz, width))
+    return b"".join(out)
 
 
 # --------------------------------------------------------------------------
-# batch (many-slice) encoders — one vectorized pass over a whole Arrow
-# batch of blobs instead of one numpy pipeline per blob. Bit-identical to
-# the per-blob encoders (asserted in tests/test_codec.py): the per-blob
-# path costs ~15 small-array numpy calls + 2 struct packs per blob, which
-# dominates encode wall time when blobs are small (e.g. 24-row day chunks
-# of an hourly grid — the common chunk-table shape). Here every reduction
-# runs once per BATCH via ufunc.reduceat over block boundaries, and the
-# variable-width bit packing happens as ONE global scatter + packbits;
-# the only remaining per-blob work is byte-slice assembly.
+# batch (many-slice) codecs — the engine's one path. One vectorized pass
+# over a whole Arrow batch of blobs: every reduction runs once per BATCH
+# via ufunc.reduceat over block boundaries, and the variable-width bit
+# packing is ONE global scatter + packbits (one gather on decode). Blobs
+# are small (e.g. 24-row day chunks of an hourly grid), so the only
+# per-blob Python left is byte-slice assembly and the header walk.
 # --------------------------------------------------------------------------
 
 
@@ -155,16 +153,16 @@ def _bitlen_u64(m: np.ndarray) -> np.ndarray:
     return np.where(hi > 0, bl_hi + 32, bl_lo).astype(np.int64)
 
 
-def _blocks_of_slices(starts: np.ndarray, ends: np.ndarray, block: int):
-    """Split contiguous slices [starts[i], ends[i]) into ≤``block``-sized
+def _blocks_of_slices(starts: np.ndarray, ends: np.ndarray):
+    """Split contiguous slices [starts[i], ends[i]) into ≤``BLOCK``-sized
     sub-blocks. Returns (blob_of_block, bstart, bend) arrays."""
     lens = ends - starts
-    nblk = (lens + block - 1) // block
+    nblk = (lens + BLOCK - 1) // BLOCK
     blob_of_block = np.repeat(np.arange(len(starts)), nblk)
     first = np.repeat(np.cumsum(nblk) - nblk, nblk)
     k = np.arange(len(blob_of_block)) - first
-    bstart = starts[blob_of_block] + k * block
-    bend = np.minimum(bstart + block, ends[blob_of_block])
+    bstart = starts[blob_of_block] + k * BLOCK
+    bend = np.minimum(bstart + BLOCK, ends[blob_of_block])
     return blob_of_block, bstart, bend
 
 
@@ -240,11 +238,9 @@ def _pack_mask_blocks(
     return np.packbits(out_bits).tobytes(), offs
 
 
-def xorblk_encode_many(
-    values: np.ndarray, starts, ends, block: int = BLOCK
-) -> list[bytes]:
+def xorblk_encode_many(values: np.ndarray, starts, ends) -> list[bytes]:
     """Batch twin of ``xorblk_encode``: returns
-    ``[xorblk_encode(values[s:e], block) for (s, e)]`` bit-identically,
+    ``[xorblk_encode(values[s:e]) for (s, e)]`` bit-identically,
     with every reduction vectorized across all slices. The slices must be
     non-empty, contiguous, ascending, and tile ``values``."""
     v = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
@@ -258,7 +254,7 @@ def xorblk_encode_many(
     np.bitwise_xor(v[1:], v[:-1], out=x[1:])
     x[starts] = v[starts]
     nz = x != 0
-    blob_of_block, bstart, bend = _blocks_of_slices(starts, ends, block)
+    blob_of_block, bstart, bend = _blocks_of_slices(starts, ends)
     bcnt = bend - bstart
     m = np.bitwise_or.reduceat(x, bstart)
     emit = m != 0
@@ -271,7 +267,7 @@ def xorblk_encode_many(
     heads = np.zeros(len(starts), dtype=[("m", "S4"), ("n", "<u4"), ("b", "<u2")])
     heads["m"] = _XORBLK_MAGIC
     heads["n"] = lens
-    heads["b"] = block
+    heads["b"] = BLOCK
     head_b = heads.tobytes()
     bh = np.zeros(len(bstart), dtype=[("t", "u1"), ("w", "u1")])
     bh["t"] = np.where(emit, trail, 0)
@@ -299,9 +295,7 @@ def xorblk_encode_many(
     return out
 
 
-def dodblk_encode_many(
-    ts: np.ndarray, starts, ends, block: int = BLOCK
-) -> list[bytes]:
+def dodblk_encode_many(ts: np.ndarray, starts, ends) -> list[bytes]:
     """Batch twin of ``dodblk_encode`` — same contract as
     ``xorblk_encode_many``."""
     t = np.ascontiguousarray(ts, dtype=np.int64)
@@ -325,9 +319,7 @@ def dodblk_encode_many(
     zstarts = np.cumsum(m_lens) - m_lens
     zends = zstarts + m_lens
     has_z = m_lens > 0
-    blob_of_block, bstart, bend = _blocks_of_slices(
-        zstarts[has_z], zends[has_z], block
-    )
+    blob_of_block, bstart, bend = _blocks_of_slices(zstarts[has_z], zends[has_z])
     blob_ids = np.flatnonzero(has_z)[blob_of_block] if len(bstart) else blob_of_block
     bcnt = bend - bstart
     if len(bstart):
@@ -346,7 +338,7 @@ def dodblk_encode_many(
     heads = np.zeros(len(starts), dtype=[("m", "S4"), ("n", "<u4"), ("b", "<u2")])
     heads["m"] = _DODBLK_MAGIC
     heads["n"] = lens.astype("<u4")
-    heads["b"] = block
+    heads["b"] = BLOCK
     head_b = heads.tobytes()
     # per-blob raw prefix: <q t0> for n==1, <qq t0 d0> for n>=2
     t0 = t[starts]
@@ -412,16 +404,17 @@ def _segmented_starts(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def xorblk_decode_many(blobs) -> tuple[np.ndarray, np.ndarray]:
-    """Batch twin of ``xorblk_decode``: decodes a sequence of blobs into
-    (concatenated float64 values, per-blob counts) —
-    ``np.concatenate([xorblk_decode(b) for b in blobs])`` bit-identically
-    with the per-value work vectorized across all blobs."""
+    """Inverse of ``xorblk_encode_many``: decodes a sequence of blobs into
+    (concatenated float64 values, per-blob counts), bit-exactly, with the
+    per-value work vectorized across all blobs. The block size is read
+    from each blob's header."""
     lens, blk_meta = [], []  # blk_meta: (trail, width, cnt, nnz, mask_off, pay_off)
     mask_parts, pay_parts = [], []
     mask_off = pay_off = 0
     for buf in blobs:
         magic, n, block = struct.unpack_from("<4sIH", buf, 0)
-        assert magic == _XORBLK_MAGIC, "bad xorblk blob"
+        if magic != _XORBLK_MAGIC:
+            raise ValueError(f"not an xorblk blob: magic {magic!r}")
         lens.append(n)
         pos = 10
         for lo in range(0, n, block):
@@ -485,7 +478,7 @@ def xorblk_decode_many(blobs) -> tuple[np.ndarray, np.ndarray]:
 
 
 def dodblk_decode_many(blobs) -> tuple[np.ndarray, np.ndarray]:
-    """Batch twin of ``dodblk_decode`` — same contract as
+    """Inverse of ``dodblk_encode_many`` — same contract as
     ``xorblk_decode_many`` but returns int64 timestamps."""
     lens, t0s, d0s = [], [], []
     blk_meta = []  # (width, cnt, nnz, mask_off, pay_off)
@@ -493,7 +486,8 @@ def dodblk_decode_many(blobs) -> tuple[np.ndarray, np.ndarray]:
     mask_off = pay_off = 0
     for buf in blobs:
         magic, n, block = struct.unpack_from("<4sIH", buf, 0)
-        assert magic == _DODBLK_MAGIC, "bad dodblk blob"
+        if magic != _DODBLK_MAGIC:
+            raise ValueError(f"not a dodblk blob: magic {magic!r}")
         lens.append(n)
         pos = 10
         if n == 0:
@@ -591,266 +585,3 @@ def dodblk_decode_many(blobs) -> tuple[np.ndarray, np.ndarray]:
         tpref = np.where(t_starts > 0, hc[np.maximum(t_starts - 1, 0)], 0)
         out = hc - np.repeat(tpref, lens)
     return out, lens
-
-
-CODECS_ENC_MANY = {"xorblk": xorblk_encode_many}
-TS_CODECS_ENC_MANY = {"dodblk": dodblk_encode_many}
-CODECS_DEC_MANY = {"xorblk": xorblk_decode_many}
-TS_CODECS_DEC_MANY = {"dodblk": dodblk_decode_many}
-
-
-# --------------------------------------------------------------------------
-# dodblk — vectorized delta-of-delta int64 timestamp codec (production path)
-# --------------------------------------------------------------------------
-
-_DODBLK_MAGIC = b"DB1\x00"
-
-
-def _zigzag(x: np.ndarray) -> np.ndarray:
-    x = x.astype(np.int64, copy=False)
-    return ((x << 1) ^ (x >> 63)).view(np.uint64)
-
-
-def _unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(_U64, copy=False)
-    return ((u >> _U64(1)).view(np.int64)) ^ -((u & _U64(1)).view(np.int64))
-
-
-def dodblk_encode(ts: np.ndarray, block: int = BLOCK) -> bytes:
-    """int64 array (epoch units) → first value + first delta raw, then
-    zigzagged delta-of-deltas in per-block fixed width. On a gap-filled
-    regular grid the dods are all zero → ~2 bytes/block."""
-    t = np.ascontiguousarray(ts, dtype=np.int64)
-    n = len(t)
-    head = struct.pack("<4sIH", _DODBLK_MAGIC, n, block)
-    if n == 0:
-        return head
-    if n == 1:
-        return head + struct.pack("<q", t[0])
-    d = np.diff(t)
-    dod = np.diff(d)
-    z = _zigzag(dod)
-    out = [head, struct.pack("<qq", t[0], d[0])]
-    for lo in range(0, len(z), block):
-        zb = z[lo : lo + block]
-        nzmask = zb != 0
-        nz = zb[nzmask]
-        if len(nz) == 0:
-            out.append(struct.pack("<B", 0))
-            continue
-        width = int(nz.max()).bit_length()
-        out.append(struct.pack("<B", width))
-        out.append(np.packbits(nzmask).tobytes())
-        out.append(_pack_fixed(nz, width))
-    return b"".join(out)
-
-
-def dodblk_decode(buf: bytes) -> np.ndarray:
-    magic, n, block = struct.unpack_from("<4sIH", buf, 0)
-    assert magic == _DODBLK_MAGIC, "bad dodblk blob"
-    pos = 10
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    if n == 1:
-        return np.array(struct.unpack_from("<q", buf, pos), dtype=np.int64)
-    t0, d0 = struct.unpack_from("<qq", buf, pos)
-    pos += 16
-    m = n - 2
-    z = np.empty(m, dtype=_U64)
-    for lo in range(0, m, block):
-        cnt = min(block, m - lo)
-        (width,) = struct.unpack_from("<B", buf, pos)
-        pos += 1
-        if width == 0:
-            z[lo : lo + cnt] = 0
-            continue
-        bm_bytes = (cnt + 7) // 8
-        nzmask = np.unpackbits(
-            np.frombuffer(buf[pos : pos + bm_bytes], dtype=np.uint8)
-        )[:cnt].astype(bool)
-        pos += bm_bytes
-        nnz = int(nzmask.sum())
-        nb = _nbytes(nnz, width)
-        blk = np.zeros(cnt, dtype=_U64)
-        blk[nzmask] = _unpack_fixed(buf[pos : pos + nb], nnz, width)
-        z[lo : lo + cnt] = blk
-        pos += nb
-    dod = _unzigzag(z)
-    d = np.concatenate([[d0], dod]).cumsum()
-    return np.concatenate([[t0], d]).cumsum().astype(np.int64)
-
-
-# --------------------------------------------------------------------------
-# classic Gorilla bitstreams (paper-exact; sequential by nature)
-# --------------------------------------------------------------------------
-
-
-class _BitWriter:
-    __slots__ = ("acc", "nbits")
-
-    def __init__(self) -> None:
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, bits: int) -> None:
-        self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-        self.nbits += bits
-
-    def getvalue(self) -> bytes:
-        pad = (-self.nbits) % 8
-        return ((self.acc << pad)).to_bytes((self.nbits + pad) // 8, "big")
-
-
-class _BitReader:
-    __slots__ = ("data", "total", "pos")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = int.from_bytes(data, "big")
-        self.total = len(data) * 8
-        self.pos = 0
-
-    def read(self, bits: int) -> int:
-        shift = self.total - self.pos - bits
-        self.pos += bits
-        return (self.data >> shift) & ((1 << bits) - 1)
-
-
-def gorilla_encode(values: np.ndarray) -> bytes:
-    """Classic Gorilla float XOR (paper §4.1.2): '0' identical; '10' reuse
-    previous (leading, meaningful) window; '11' + 5b leading + 6b
-    (meaningful-1) + meaningful bits."""
-    v = np.ascontiguousarray(values, dtype=np.float64).view(_U64)
-    n = len(v)
-    w = _BitWriter()
-    if n:
-        w.write(int(v[0]), 64)
-        prev_lead, prev_mean = -1, -1
-        ints = [int(b) for b in v]
-        for i in range(1, n):
-            x = ints[i] ^ ints[i - 1]
-            if x == 0:
-                w.write(0, 1)
-                continue
-            lead = min(64 - x.bit_length(), 31)
-            trail = (x & -x).bit_length() - 1
-            mean = 64 - lead - trail
-            prev_trail = 64 - prev_lead - prev_mean
-            if prev_lead >= 0 and lead >= prev_lead and trail >= prev_trail:
-                # fits inside previous window → '10' + prev_mean bits
-                w.write(0b10, 2)
-                w.write(x >> prev_trail, prev_mean)
-            else:
-                w.write(0b11, 2)
-                w.write(lead, 5)
-                w.write(mean - 1, 6)
-                w.write(x >> trail, mean)
-                prev_lead, prev_mean = lead, mean
-    return struct.pack("<I", n) + w.getvalue()
-
-
-def gorilla_decode(buf: bytes) -> np.ndarray:
-    (n,) = struct.unpack_from("<I", buf, 0)
-    r = _BitReader(buf[4:])
-    out = np.empty(n, dtype=_U64)
-    if n == 0:
-        return out.view(np.float64)
-    prev = r.read(64)
-    out[0] = prev
-    lead = mean = 0
-    for i in range(1, n):
-        c = r.read(1)
-        if c == 0:
-            out[i] = prev
-            continue
-        c2 = r.read(1)
-        if c2 == 1:
-            lead = r.read(5)
-            mean = r.read(6) + 1
-        bits = r.read(mean)
-        x = bits << (64 - lead - mean)
-        prev ^= x
-        out[i] = prev
-    return out.view(np.float64)
-
-
-def dod_encode(ts: np.ndarray) -> bytes:
-    """Classic Gorilla timestamp delta-of-delta (paper §4.1.1 ranges,
-    generalized to 64-bit escape): '0' dod=0; '10'+7b [-63,64];
-    '110'+9b [-255,256]; '1110'+12b [-2047,2048]; '1111'+64b raw."""
-    t = [int(x) for x in np.ascontiguousarray(ts, dtype=np.int64)]
-    n = len(t)
-    w = _BitWriter()
-    if n:
-        w.write(t[0] & ((1 << 64) - 1), 64)
-    if n > 1:
-        # two's-complement wrapping (mod 2^64) so pathological int64 inputs
-        # whose deltas overflow still round-trip
-        mask = (1 << 64) - 1
-
-        def s64(u: int) -> int:
-            u &= mask
-            return u - (1 << 64) if u >= (1 << 63) else u
-
-        d_prev = s64(t[1] - t[0])
-        w.write(d_prev & mask, 64)
-        for i in range(2, n):
-            d = s64(t[i] - t[i - 1])
-            dod = s64(d - d_prev)
-            d_prev = d
-            if dod == 0:
-                w.write(0, 1)
-            elif -63 <= dod <= 64:
-                w.write(0b10, 2)
-                w.write(dod + 63, 7)
-            elif -255 <= dod <= 256:
-                w.write(0b110, 3)
-                w.write(dod + 255, 9)
-            elif -2047 <= dod <= 2048:
-                w.write(0b1110, 4)
-                w.write(dod + 2047, 12)
-            else:
-                w.write(0b1111, 4)
-                w.write(dod & ((1 << 64) - 1), 64)
-    return struct.pack("<I", n) + w.getvalue()
-
-
-def dod_decode(buf: bytes) -> np.ndarray:
-    (n,) = struct.unpack_from("<I", buf, 0)
-    r = _BitReader(buf[4:])
-    out = np.empty(n, dtype=np.int64)
-    if n == 0:
-        return out
-
-    def s64(u: int) -> int:
-        u &= (1 << 64) - 1
-        return u - (1 << 64) if u >= (1 << 63) else u
-
-    out[0] = s64(r.read(64))
-    if n == 1:
-        return out
-    d = s64(r.read(64))
-    out[1] = s64(int(out[0]) + d)
-    for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        elif r.read(1) == 0:
-            dod = r.read(7) - 63
-        elif r.read(1) == 0:
-            dod = r.read(9) - 255
-        elif r.read(1) == 0:
-            dod = r.read(12) - 2047
-        else:
-            dod = s64(r.read(64))
-        d = s64(d + dod)
-        out[i] = s64(int(out[i - 1]) + d)
-    return out
-
-
-CODECS = {
-    "xorblk": (xorblk_encode, xorblk_decode),
-    "gorilla": (gorilla_encode, gorilla_decode),
-}
-TS_CODECS = {
-    "dodblk": (dodblk_encode, dodblk_decode),
-    "dod": (dod_encode, dod_decode),
-}

@@ -183,9 +183,9 @@ def moments(df: DataFrame, min_n: int = 3) -> DataFrame:
     `m2 * sqrt(m2)` because sqrt is IEEE-exact everywhere while pow()
     may differ by an ulp between libm and the JVM. Degenerate series
     (n < min_n or relative m2 below 1e-12) drop on both engines. Null
-    values are skipped in place (the SQL sum contract); float NaN
-    values are treated the same way — pass pre-filtered data if the
-    distinction matters."""
+    values are skipped in place (the SQL sum contract) and do not count
+    toward ``n``; float NaN values are treated the same way — pass
+    pre-filtered data if the distinction matters."""
     import numpy as np
     import pandas as pd
 
@@ -214,7 +214,7 @@ def moments(df: DataFrame, min_n: int = 3) -> DataFrame:
             d3 = d2 * d
             d4 = d3 * d
             rows.append((
-                conv[s], met[s], float(e - s), mn,
+                conv[s], met[s], float(len(fx)), mn,
                 float(np.cumsum(d)[-1]),
                 float(np.cumsum(d2)[-1]),
                 float(np.cumsum(d3)[-1]),

@@ -59,7 +59,9 @@ def tier_schema() -> T.StructType:
 TIER = tier_schema()
 
 # -------------------------------------------------------------------- chunks
-# Gorilla/delta-of-delta chunk blobs (codec.py / chunks.py).
+# Gorilla/delta-of-delta chunk blobs (codec.py / chunks.py). ts_codec /
+# val_codec hold the stored format tags ("dodblk" / "xorblk"); readers
+# raise on any other.
 CHUNKS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
