@@ -6,8 +6,9 @@
 Two parts:
 1. headline operator queries over $SPARK_GRAFT_SF_DIR (default
    /root/testdata/sf0.1) at local[$SPARK_GRAFT_CPUS];
-2. the flagship transcript rollup pipeline (synth → features → 1m→1h→1d
-   cascade) run at local[N/4] and local[N] on the SAME input — the
+2. the production pipeline, ``jobs.run_pipeline`` (scan → features →
+   1m→1h→1d cascade → gap-fill → chunk blobs → lineage), run at
+   local[N/4] and local[N] on the SAME input — the
    in-sandbox evidence for the BASELINE scaling-efficiency criterion
    (a real two-cluster run is impossible here; see BASELINE.md).
 
@@ -18,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -31,7 +33,7 @@ setdefault_simd()
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tsengine import chunks, features, gapfill, indicators, rollup, synth, textops, vecops  # noqa: E402
+from tsengine import chunks, gapfill, indicators, jobs, lineage, rollup, synth, textops, vecops  # noqa: E402
 from tsengine import entry_queries as eq  # noqa: E402
 from tsengine.session import get_spark, stop_spark  # noqa: E402
 
@@ -85,40 +87,16 @@ def warmup_setup(spark) -> str:
     return raw
 
 
-def transcript_pipeline(spark, out_root: str, raw: str) -> dict[str, float]:
-    """scan transcripts → signal pack → 1m→1h→1d cascade. The raw-volume
-    job writes the 1m tier once in WIDE-STATS form (one row per
-    (conv, minute), all metrics' components — the TimescaleDB continuous-
-    aggregate shape); every other output derives from re-reading that
-    small scratch, so raw is scanned exactly once and no cascade shuffle
-    ever carries per-metric rows or a string metric key. Public long-form
-    tiers are post-agg unpivots. (Counting the outputs is bookkeeping, not
-    pipeline — see count_outputs.)
-
-    Returns per-stage wall seconds so the artifact can quantify the
-    residual serial component against the box's own thread-scaling
-    ceiling (BENCH derived.stage_breakdown): stage 1 = the raw-volume
-    job (scan + signal derivation + wide 1m rollup + its write), stage
-    2 = the publish cascade (1h/1d levels + long-form unpivots over the
-    small scratch — output-commit/AQE-planning heavy, the part that
-    amortizes worst at small inputs)."""
-    mets = features.DEFAULT_METRICS
-    t0 = time.time()
-    t = spark.read.parquet(raw)
-    wide = features.derive_features_chunked(t)
-    g1m = rollup.rollup_from_raw_wide_stats(wide, mets, "1m")
-    g1m.write.mode("overwrite").parquet(f"{out_root}/tier_1m_wide")
-    t1 = time.time()
-    # overlapped publish: each tier's long-form unpivot write runs
-    # concurrently with the next cascade level (independent jobs over the
-    # same scratch) — the post-rollup tail is two overlap groups instead
-    # of five sequential small jobs (see rollup.publish_cascade_wide)
-    rollup.publish_cascade_wide(spark, out_root, mets)
-    t2 = time.time()
-    return {
-        "scan_signal_rollup1m_write": round(t1 - t0, 3),
-        "publish_cascade": round(t2 - t1, 3),
-    }
+def stage_seconds(spark, out_root: str) -> dict[str, float]:
+    """Per-stage wall seconds of the run in ``out_root``, read from its
+    lineage rows (every unit row of a stage carries the stage's
+    ``wall_ms``): ``tier_cascade`` = scan + signal pack + wide 1m rollup
+    + the publish cascade; ``chunks`` = gap-fill + chunk encode."""
+    rows = (
+        lineage.LineageLog(spark, out_root).metrics()
+        .groupBy("stage").agg(F.max("wall_ms").alias("ms")).collect()
+    )
+    return {r["stage"]: round(r["ms"] / 1000, 3) for r in rows}
 
 
 def count_outputs(spark, out_root: str) -> tuple[int, int]:
@@ -145,8 +123,9 @@ def _headline_thunks(spark, sf_dir: str) -> dict[str, object]:
     for the timed pass."""
     thunks: dict[str, object] = {}
     ev = eq._events_long(spark, sf_dir)
-    thunks["tier_cascade_events"] = lambda: count_action(
-        rollup.cascade(rollup.cascade(rollup.rollup_from_raw(ev, "1m"), "1h"), "1d"))
+    st = rollup.stats()
+    thunks["tier_cascade_events"] = lambda: count_action(rollup.cascade(
+        rollup.cascade(rollup.rollup(ev, "1m", st), "1h", st), "1d", st))
     thunks["indicators"] = lambda: count_action(indicators.indicator_battery(ev))
     view = ev.where(F.col("metric") == "view")
     thunks["gapfill_linear"] = lambda: count_action(
@@ -454,10 +433,9 @@ def main() -> None:
     derived["scaling_efficiency_median"] = round(effs[len(effs) // 2], 3)
     derived["scaling_pair_rounds"] = len(effs)
     derived["windows"] = windows
-    # per-stage split of the best local[big] pass: quantifies how much of
-    # the wall is the raw-volume stage (scales with cores) vs the publish
-    # cascade (output-commit/AQE-planning heavy — the serial residual that
-    # keeps the paired median below the box's 0.78 pure-CPU ceiling)
+    # per-stage split of the best local[big] pass, from its lineage rows:
+    # the tier stage (raw-volume rollup + publish cascade) vs the chunk
+    # stage (gap-fill + chunk encode)
     derived["stage_breakdown"] = stage_breakdown
 
     total = round(sum(queries.values()), 3)
@@ -473,8 +451,8 @@ def main() -> None:
 
 
 def pipeline_worker(cores: int) -> None:
-    """Subprocess entry: run the flagship pipeline at local[cores], print
-    one JSON line {sec, turns, pts}.
+    """Subprocess entry: run ``jobs.run_pipeline`` at local[cores], print
+    one JSON line {sec, turns, pts, stages}.
 
     The first pass warms JIT/codegen (a fixed ~30 s single-JVM cost that a
     long-running cluster pays once and that would otherwise swamp the
@@ -490,15 +468,22 @@ def pipeline_worker(cores: int) -> None:
     )
     out = f"/tmp/tsengine_bench_c{cores}"
     raw = synth_setup(spark)  # data-source materialization (untimed, shared)
-    transcript_pipeline(spark, f"{out}_warm", warmup_setup(spark))  # JIT warm-up (not reported)
+
+    def run(root: str, src: str) -> float:
+        """The production pipeline from an emptied output root, resume off
+        so every stage runs; returns its wall seconds."""
+        shutil.rmtree(root, ignore_errors=True)
+        t0 = time.time()
+        jobs.run_pipeline(spark, spark.read.parquet(src), root, resume=False)
+        return time.time() - t0
+
+    run(f"{out}_warm", warmup_setup(spark))  # JIT warm-up (not reported)
     best = None
     stages: dict[str, float] = {}
     for _ in range(int(os.environ.get("SPARK_GRAFT_BENCH_INNER", "1"))):
-        t0 = time.time()
-        st = transcript_pipeline(spark, out, raw)
-        sec = time.time() - t0
+        sec = run(out, raw)
         if best is None or sec < best:
-            best, stages = sec, st
+            best, stages = sec, stage_seconds(spark, out)
     turns, pts = count_outputs(spark, out)
     print(json.dumps(
         {"sec": round(best, 3), "turns": turns, "pts": pts, "stages": stages}

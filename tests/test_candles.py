@@ -1,4 +1,5 @@
-"""OHLC candle tests: hand cases + cascade ≡ rebuild."""
+"""OHLC candle tests: hand cases (cascade ≡ rebuild is
+``test_rollup.py::test_cascade_equals_rebuild[candles]``)."""
 
 from __future__ import annotations
 
@@ -24,7 +25,7 @@ def test_ohlc_hand_case(spark):
     )
     got = {
         r["bucket_ts"]: (r["open"], r["high"], r["low"], r["close"], r["cnt"])
-        for r in rollup.ohlc(df, tier="1h").collect()
+        for r in rollup.rollup(df, "1h", rollup.candles()).collect()
     }
     assert got[_ts(9)] == (10.0, 50.0, 5.0, 20.0, 4)
     assert got[_ts(10)] == (99.0, 99.0, 99.0, 99.0, 1)
@@ -41,17 +42,5 @@ def test_ohlc_tie_on_timestamp_breaks_by_seq(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, metric string, ts timestamp, event_id long, value double"
     )
-    r = rollup.ohlc(df, tier="1h").collect()[0]
+    r = rollup.rollup(df, "1h", rollup.candles()).collect()[0]
     assert (r["open"], r["close"]) == (3.0, 8.0)
-
-
-def test_cascade_ohlc_equals_rebuild(transcripts, spark):
-    # daily candles cascaded from hourly == daily candles from raw
-    from tsengine import features
-
-    ev = features.to_long(features.derive_features(transcripts))
-    direct = rollup.ohlc(ev, tier="1d", seq_col=None)
-    cascaded = rollup.cascade_ohlc(rollup.ohlc(ev, tier="1h", seq_col=None), "1d")
-    assert direct.count() == cascaded.count()
-    assert direct.exceptAll(cascaded).count() == 0
-    assert cascaded.exceptAll(direct).count() == 0

@@ -79,9 +79,17 @@ def test_chunk_bounds_and_stats(spark, transcripts):
     )
     filled = gapfill.gapfill_sql(long, "1m", "linear")
     enc = chunks.encode_chunks(filled, chunk_span="1h").cache()
-    # every chunk's span respects its chunk_start hour
+    # every chunk's span respects its chunk_start hour: the points decoded
+    # in each hour are exactly the Σn of the blobs starting at that hour
     dec = chunks.decode_chunks(enc)
-    viol = dec.withColumn("cs", F.date_trunc("hour", "bucket_ts"))
+    key = ["conv_id", "metric", "chunk_start"]
+    pts = dec.groupBy(
+        "conv_id", "metric", F.date_trunc("hour", "bucket_ts").alias("chunk_start")
+    ).agg(F.count("*").alias("pts"))
+    blob_n = enc.groupBy(*key).agg(F.sum("n").alias("n"))
+    j = pts.join(blob_n, key, "full")
+    assert j.count() > 0
+    assert j.where(~F.col("pts").eqNullSafe(F.col("n"))).count() == 0
     # regroup and compare chunk_start vs recomputed hour
     back = chunks.encode_chunks(dec, chunk_span="1h")
     assert back.count() == enc.count()

@@ -3,8 +3,11 @@
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -13,7 +16,10 @@ from tsengine import features, rollup
 
 def _tiers(transcripts):
     long = features.to_long(features.derive_features(transcripts))
-    return long, rollup.build_tiers(long)
+    st = rollup.stats()
+    t1m = rollup.rollup(long, "1m", st)
+    t1h = rollup.cascade(t1m, "1h", st)
+    return long, {"1m": t1m, "1h": t1h, "1d": rollup.cascade(t1h, "1d", st)}
 
 
 def _norm(pdf):
@@ -45,21 +51,64 @@ def test_1m_tier_matches_pandas_oracle(spark, transcripts):
     np.testing.assert_allclose(got["sumsq"], exp["sumsq"], rtol=1e-9)
 
 
-def test_cascade_consistency(spark, transcripts):
-    long, tiers = _tiers(transcripts)
-    # 1h from 1m must equal 1h computed directly from raw
-    direct_1h = _norm(rollup.rollup_from_raw(long, "1h").toPandas())
-    cascaded_1h = _norm(tiers["1h"].toPandas())
-    assert len(direct_1h) == len(cascaded_1h)
-    assert (direct_1h["cnt"].to_numpy() == cascaded_1h["cnt"].to_numpy()).all()
-    np.testing.assert_allclose(direct_1h["sum"], cascaded_1h["sum"], rtol=1e-9)
-    np.testing.assert_allclose(direct_1h["min"], cascaded_1h["min"])
-    np.testing.assert_allclose(direct_1h["max"], cascaded_1h["max"])
+# merge ≡ rebuild, one case per synopsis spec: (spec, its raw input, keys)
+_METS = features.DEFAULT_METRICS
+_CASES = {
+    "stats_long": (rollup.stats(), "long", ("conv_id", "metric")),
+    "stats_wide": (rollup.stats(_METS), "wide", ("conv_id",)),
+    "hist": (rollup.hist(), "long", ("conv_id", "metric")),
+    # transcript timestamps are unique per series, so no sequence column
+    "candles": (rollup.candles(seq_col=None), "long", ("conv_id", "metric")),
+    "m4": (rollup.m4(tiebreak="event_id"), "long", ("conv_id", "metric")),
+}
 
-    # row-count monotonicity 1m ≥ 1h ≥ 1d; total cnt preserved at every tier
-    cnts = {t: tiers[t].toPandas() for t in rollup.TIER_ORDER}
-    assert len(cnts["1m"]) >= len(cnts["1h"]) >= len(cnts["1d"])
-    assert cnts["1m"]["cnt"].sum() == cnts["1h"]["cnt"].sum() == cnts["1d"]["cnt"].sum()
+
+def _by_key(df, keys):
+    out = {}
+    for r in df.collect():
+        d = r.asDict()
+        out[tuple(d.pop(k) for k in (*keys, "bucket_ts"))] = d
+    return out
+
+
+def _assert_same(got, want, keys):
+    a, b = _by_key(got, keys), _by_key(want, keys)
+    assert a.keys() == b.keys()
+    for k, row in a.items():
+        for c, x in row.items():
+            y = b[k][c]
+            if c.endswith("sum") or c.endswith("sumsq"):
+                # float re-association only
+                assert (x is None and y is None) or math.isclose(
+                    x, y, rel_tol=1e-9, abs_tol=1e-9), (k, c, x, y)
+            else:
+                assert x == y, (k, c, x, y)
+
+
+def _total_cnt(df):
+    cnts = [c for c in df.columns if c == "cnt" or c.endswith("__cnt")]
+    return df.select(sum(F.sum(c) for c in cnts)).first()[0]
+
+
+@pytest.mark.parametrize("case", list(_CASES))
+def test_cascade_equals_rebuild(spark, transcripts, case):
+    """Every synopsis cascades exactly: 1h from 1m and 1d from that 1h
+    equal the same tiers rolled up directly from raw rows; row counts
+    shrink 1m ≥ 1h ≥ 1d and the total count is preserved at every tier."""
+    syn, src, on = _CASES[case]
+    wide = features.derive_features_chunked(transcripts)
+    long = features.to_long(wide).withColumn(
+        "event_id", F.xxhash64("conv_id", "metric", "ts"))
+    df = {"long": long, "wide": wide}[src]
+    t1m = rollup.rollup(df, "1m", syn, on=on)
+    t1h = rollup.cascade(t1m, "1h", syn, on=on)
+    t1d = rollup.cascade(t1h, "1d", syn, on=on)
+    _assert_same(t1h, rollup.rollup(df, "1h", syn, on=on), on)
+    _assert_same(t1d, rollup.rollup(df, "1d", syn, on=on), on)
+
+    n = [t.count() for t in (t1m, t1h, t1d)]
+    assert n[0] > n[1] >= n[2] > 0
+    assert _total_cnt(t1m) == _total_cnt(t1h) == _total_cnt(t1d) > 0
 
 
 def test_finalize_std(spark, transcripts):
@@ -105,9 +154,8 @@ def test_session_rollup_gap_semantics(spark):
 
 
 def test_hist_sketch_cascade_and_quantiles(spark):
-    """Histogram sketch: 1m→1h cascade must equal the direct 1h histogram
-    (exact integer merge), and the p50 estimate must bracket the exact
-    median within its bin."""
+    """Histogram sketch cascaded 1m→1h: the p50 estimate must bracket the
+    exact median within its bin."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -121,16 +169,8 @@ def test_hist_sketch_cascade_and_quantiles(spark):
     ev = df.select("conv_id", F.timestamp_seconds("epoch").alias("ts"), "metric", "value")
 
     bounds = rollup.DEFAULT_HIST_BOUNDS
-    nbins = len(bounds) + 1
-    h1m = rollup.rollup_hist(ev, bounds, "1m")
-    h1h_cascade = rollup.cascade_hist(h1m, "1h", nbins)
-    # direct 1h histogram over raw
-    direct = rollup.rollup_hist(ev, bounds, "1h")
-    a = {(r["conv_id"], r["bucket_ts"], r["metric"]): (r["cnt"], list(r["hist"]))
-         for r in h1h_cascade.collect()}
-    b = {(r["conv_id"], r["bucket_ts"], r["metric"]): (r["cnt"], list(r["hist"]))
-         for r in direct.collect()}
-    assert a == b
+    hs = rollup.hist(bounds)
+    h1h_cascade = rollup.cascade(rollup.rollup(ev, "1m", hs), "1h", hs)
 
     est = h1h_cascade.select(
         "conv_id", "bucket_ts", rollup.hist_quantile(0.5, bounds).alias("p50")
@@ -159,13 +199,12 @@ def test_merge_tiers_equals_from_scratch(spark, transcripts):
         ["char_rate", "latency_s"],
     ).cache()
     cutoff = long.agg(F.expr("percentile(cast(ts as double), 0.7)")).first()[0]
-    on_time = rollup.rollup_from_raw(
-        long.where(F.col("ts").cast("double") < cutoff), "1m")
-    late = rollup.rollup_from_raw(
-        long.where(F.col("ts").cast("double") >= cutoff), "1m")
+    st = rollup.stats()
+    on_time = rollup.rollup(long.where(F.col("ts").cast("double") < cutoff), "1m", st)
+    late = rollup.rollup(long.where(F.col("ts").cast("double") >= cutoff), "1m", st)
     merged = rollup.merge_tiers(on_time, late).toPandas().set_index(
         ["conv_id", "bucket_ts", "metric"]).sort_index()
-    direct = rollup.rollup_from_raw(long, "1m").toPandas().set_index(
+    direct = rollup.rollup(long, "1m", st).toPandas().set_index(
         ["conv_id", "bucket_ts", "metric"]).sort_index()
     assert len(merged) == len(direct)
     assert (merged["cnt"] == direct["cnt"]).all()
@@ -181,7 +220,7 @@ def test_merge_tiers_empty_delta_is_identity(spark, transcripts):
         features.derive_features(transcripts.where(F.col("conv_id") < "conv-00000005")),
         ["char_rate"],
     )
-    t = rollup.rollup_from_raw(long, "1m")
+    t = rollup.rollup(long, "1m", rollup.stats())
     empty = t.where(F.lit(False))
     merged = rollup.merge_tiers(t, empty)
     a = t.toPandas().sort_values(["conv_id", "bucket_ts", "metric"]).reset_index(drop=True)

@@ -175,35 +175,6 @@ def test_mix_entropy_hand_computed(spark):
     assert got["c3"]["n_events"] == 4 and got["c3"]["n_cats"] == 2
 
 
-# ------------------------------------------------------- M4 cascade -------
-
-def test_m4_cascade_merge_equals_rebuild(spark):
-    # 2 series x 30 irregular points across 3 days: the day tier built by
-    # merging hour-tier structs must equal the day tier built from raw
-    import random
-
-    rng = random.Random(7)
-    rows = []
-    eid = 0
-    for conv in ("a", "b"):
-        for _ in range(30):
-            ts = datetime(2024, 3, 1 + rng.randrange(3), rng.randrange(24),
-                          rng.randrange(60), rng.randrange(60))
-            rows.append((conv, "m", ts, round(rng.uniform(-5, 5), 3), eid))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "conv_id string, metric string, ts timestamp, value double, "
-        "event_id long"
-    )
-    hour = rolling.m4_rollup(df, bucket="hour")
-    merged = rolling.m4_finalize(rolling.m4_cascade(hour, "day")).orderBy(
-        "conv_id", "bucket_ts")
-    rebuilt = rolling.m4_downsample(df, bucket="day").orderBy(
-        "conv_id", "bucket_ts")
-    assert [r.asDict() for r in merged.collect()] == [
-        r.asDict() for r in rebuilt.collect()]
-
-
 # ---------------------------------------------------------- Brown ---------
 
 def test_brown_matches_statsmodels_style_recursion(spark):

@@ -55,7 +55,7 @@ def test_streaming_tier_matches_batch(spark, tmp_path):
     metrics = ["n_chars", "tool_call", "is_user", "is_assistant"]
     wide = features.derive_features(t)
     long = features.to_long(wide, metrics)
-    batch = rollup.rollup_from_raw(long, "1m").toPandas()
+    batch = rollup.rollup(long, "1m", rollup.stats()).toPandas()
 
     merged = got.merge(batch, on=key, suffixes=("_s", "_b"), how="left")
     assert merged["cnt_b"].notna().all(), "streamed a window the batch doesn't have"

@@ -43,8 +43,9 @@ def test_tier_consistency(transcripts):
     from tsengine import features
 
     long = features.to_long(features.derive_features_chunked(transcripts))
-    t1m = rollup.rollup_from_raw(long, "1m")
-    t1h = rollup.cascade(t1m, "1h")
+    st = rollup.stats()
+    t1m = rollup.rollup(long, "1m", st)
+    t1h = rollup.cascade(t1m, "1h", st)
     bad = validate.tier_consistency_violations(t1m, t1h, "1h")
     assert bad.count() == 0
     # corrupt one coarser row → caught

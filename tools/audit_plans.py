@@ -61,6 +61,9 @@ CHECKS = {
     "single_exchange": lambda p: len(
         __import__("re").findall(r"\(\d+\) Exchange", p)
     ) <= 1,
+    # the hist sketch bins each row ONCE into a projected _bin column; its
+    # per-bin sums compare that integer instead of re-running hist_bin
+    "bin_once": lambda p: "AS _bin#" in p and "WHEN (size(filter(" not in p,
     # a plan that survives 100 TB never falls back to an all-pairs join
     "no_cartesian": lambda p: (
         "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
@@ -82,9 +85,10 @@ def main() -> None:
     spark = get_spark(master="local[4]")
     ev = eq._events_long(spark, sf)
 
-    audit("tier_1m (rollup)", rollup.rollup_from_raw(ev, "1m"),
+    st = rollup.stats()
+    audit("tier_1m (rollup)", rollup.rollup(ev, "1m", st),
           ["partial_agg", "codegen"])
-    audit("tier cascade 1h", rollup.cascade(rollup.rollup_from_raw(ev, "1m"), "1h"),
+    audit("tier cascade 1h", rollup.cascade(rollup.rollup(ev, "1m", st), "1h", st),
           ["partial_agg", "codegen"])
     # the pipeline's actual cascade path: wide-stats 1m → wide 1h → long view
     _tr = spark.read.parquet(f"{sf}/events.parquet").select(
@@ -93,11 +97,14 @@ def main() -> None:
         F.col("value").alias("m_a"),
         (F.col("value") * 2).alias("m_b"),
     )
-    _g1m = rollup.rollup_from_raw_wide_stats(_tr, ["m_a", "m_b"], "1m")
+    _wst = rollup.stats(["m_a", "m_b"])
+    _g1m = rollup.rollup(_tr, "1m", _wst, on=("conv_id",))
     audit("tier cascade wide 1h (pipeline path)",
-          rollup.unpivot_stats(rollup.cascade_wide(_g1m, ["m_a", "m_b"], "1h"),
+          rollup.unpivot_stats(rollup.cascade(_g1m, "1h", _wst, on=("conv_id",)),
                                ["m_a", "m_b"]),
           ["partial_agg", "codegen", "no_cartesian"])
+    audit("hist sketch 1m→1h quantiles", eq.QUERIES["ts_hist_quantiles"](spark, sf),
+          ["partial_agg", "bin_once"])
     audit("filter pushdown (metric=view)",
           ev.where(F.col("metric") == "view").select("conv_id", "value"),
           ["pushed_filters", "codegen"])
@@ -182,7 +189,7 @@ def main() -> None:
     # no hash-agg codegen exists for them (struct-min is identical), but
     # the partial (map-side) aggregate still reduces the exchange to one
     # row per group, which is the property that matters at 100 TB
-    audit("ohlc candles", rollup.ohlc(ev, tier="1h"),
+    audit("ohlc candles", rollup.rollup(ev, "1h", rollup.candles()),
           ["partial_agg", "single_exchange"])
     audit("cusum (closed form)",
           temporal.cusum(ev, k=55.0, tiebreak="event_id"),
@@ -256,7 +263,7 @@ def main() -> None:
     audit("sax words (window + prefix groupBys)",
           anomaly.sax_words(ev),
           ["single_exchange", "no_cartesian"])
-    hourly_m = rollup.rollup_from_raw(ev, "1h").select(
+    hourly_m = rollup.rollup(ev, "1h", st).select(
         "conv_id", "metric", "bucket_ts",
         F.round(F.col("sum") / F.col("cnt"), 6).alias("mean_v"))
     audit("seasonal backtest (tier self equi-join)",
@@ -270,7 +277,7 @@ def main() -> None:
     # theil-sen's pairwise stage must be a co-keyed EQUI-join of the tiny
     # hourly tier (the x2 > x1 predicate rides as a post-join filter, not
     # a join strategy); rank-norm is one window sort on the series key
-    hourly_ts = rollup.rollup_from_raw(ev, "1h").select(
+    hourly_ts = rollup.rollup(ev, "1h", st).select(
         "conv_id", "metric",
         F.date_trunc("day", F.col("bucket_ts")).alias("day"),
         F.hour("bucket_ts").cast("long").alias("x"),
@@ -335,8 +342,8 @@ def main() -> None:
     cutoff = F.lit("2024-01-25 00:00:00").cast("timestamp")
     audit("tier merge (late-data refresh)",
           rollup.merge_tiers(
-              rollup.rollup_from_raw(ev.where(F.col("ts") < cutoff), "1m"),
-              rollup.rollup_from_raw(ev.where(F.col("ts") >= cutoff), "1m")),
+              rollup.rollup(ev.where(F.col("ts") < cutoff), "1m", st),
+              rollup.rollup(ev.where(F.col("ts") >= cutoff), "1m", st)),
           ["partial_agg", "no_cartesian"])
 
     # continuation pack: ramps are two window passes + one island groupBy

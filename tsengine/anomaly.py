@@ -241,7 +241,7 @@ def psi_drift(
     (PSI > 0.2 ≈ "distribution shifted, investigate"). Emits one row per
     key: (keys…, n_ref, n_cur, psi, drifted).
 
-    Fixed bounds (same contract as ``rollup.rollup_hist``) keep the bins
+    Fixed bounds (same contract as ``rollup.hist``) keep the bins
     mergeable and the score reproducible; values outside [lo, hi] clamp
     into the edge bins. Bins empty on BOTH sides contribute exactly 0
     after flooring, so they never need materializing — the bin spine is
@@ -487,7 +487,7 @@ def sax_words(
     # null values would bias mu/var (count(*) counts them, the sums skip
     # them) and map an all-null segment to the TOP letter via the
     # null-falls-through-when chain — drop them at the operator boundary,
-    # same contract as rollup_from_raw / m4_rollup
+    # same contract as the single-value ``rollup`` synopses
     df = df.where(F.col(value_col).isNotNull())
     ties = [c for c in order_cols if c in df.columns]
     wseq = W.partitionBy(*keys).orderBy(ts_col, *ties)

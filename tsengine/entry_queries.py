@@ -155,21 +155,23 @@ def _tier_out(t: DataFrame) -> DataFrame:
 
 @q("ts_tier_1m", _TIER_SQL.format(ev=_EV, unit="minute"))
 def ts_tier_1m(spark, sf_dir):
-    return _tier_out(rollup.rollup_from_raw(_events_long(spark, sf_dir), "1m"))
+    return _tier_out(rollup.rollup(_events_long(spark, sf_dir), "1m", rollup.stats()))
 
 
 @q("ts_tier_1h_cascade", _TIER_SQL.format(ev=_EV, unit="hour"))
 def ts_tier_1h_cascade(spark, sf_dir):
     """1h tier computed FROM the 1m tier (cascade, never raw) — the oracle
     aggregates raw directly, so a match proves tier-cascade consistency."""
-    t1m = rollup.rollup_from_raw(_events_long(spark, sf_dir), "1m")
-    return _tier_out(rollup.cascade(t1m, "1h"))
+    st = rollup.stats()
+    t1m = rollup.rollup(_events_long(spark, sf_dir), "1m", st)
+    return _tier_out(rollup.cascade(t1m, "1h", st))
 
 
 @q("ts_tier_1d_cascade", _TIER_SQL.format(ev=_EV, unit="day"))
 def ts_tier_1d_cascade(spark, sf_dir):
-    t1m = rollup.rollup_from_raw(_events_long(spark, sf_dir), "1m")
-    return _tier_out(rollup.cascade(rollup.cascade(t1m, "1h"), "1d"))
+    st = rollup.stats()
+    t1m = rollup.rollup(_events_long(spark, sf_dir), "1m", st)
+    return _tier_out(rollup.cascade(rollup.cascade(t1m, "1h", st), "1d", st))
 
 
 @q(
@@ -185,8 +187,9 @@ FROM ev GROUP BY 1, 2, 3
 )
 def ts_tier_1h_stats(spark, sf_dir):
     """finalize(): mean/std derived from reaggregable components only."""
-    t1m = rollup.rollup_from_raw(_events_long(spark, sf_dir), "1m")
-    fin = rollup.finalize(rollup.cascade(t1m, "1h"))
+    st = rollup.stats()
+    t1m = rollup.rollup(_events_long(spark, sf_dir), "1m", st)
+    fin = rollup.finalize(rollup.cascade(t1m, "1h", st))
     return fin.select(
         "conv_id",
         "bucket_ts",
@@ -1989,8 +1992,8 @@ def mm_png_roundtrip(spark, sf_dir):
 def ts_streaming_tier(spark, sf_dir):
     """Structured-Streaming 1m tier drained with trigger(availableNow=True)
     over the SAME events input, against the batch-tier oracle — stream and
-    batch share one component-set definition (streaming.tier_agg_exprs), so
-    the drained stream must be row-identical to the batch rollup."""
+    batch share one synopsis definition (``rollup.stats``), so the drained
+    stream must be row-identical to the batch rollup."""
     from tsengine import streaming as streaming_mod
 
     sch = _read(spark, sf_dir, "events").schema
@@ -2159,7 +2162,7 @@ def ts_normalize_coords(spark, sf_dir):
 
 
 # ===========================================================================
-# Reaggregable histogram-sketch quantiles (rollup.rollup_hist/cascade_hist)
+# Reaggregable histogram-sketch quantiles (rollup.hist spec, rollup/cascade)
 # ===========================================================================
 
 _HB = rollup.DEFAULT_HIST_BOUNDS
@@ -2211,8 +2214,8 @@ def ts_hist_quantiles(spark, sf_dir):
     re-read, chosen over t-digest because the merge is order-independent
     and the estimate deterministic (SQL-oracle-checkable end to end)."""
     ev = _events_long(spark, sf_dir)
-    h1m = rollup.rollup_hist(ev, _HB, "1m")
-    h1h = rollup.cascade_hist(h1m, "1h", _NB)
+    hs = rollup.hist(_HB)
+    h1h = rollup.cascade(rollup.rollup(ev, "1m", hs), "1h", hs)
     return h1h.select(
         "conv_id", "bucket_ts", "metric", "cnt",
         rollup.hist_quantile(0.5, _HB).alias("p50"),
@@ -3254,7 +3257,8 @@ def ts_sketch_error(spark, sf_dir):
         F.max(F.when(F.col("rn") == _target(0.5), F.col("value"))).alias("v50"),
         F.max(F.when(F.col("rn") == _target(0.95), F.col("value"))).alias("v95"),
     )
-    h1h = rollup.cascade_hist(rollup.rollup_hist(ev, _HB, "1m"), "1h", _NB)
+    hs = rollup.hist(_HB)
+    h1h = rollup.cascade(rollup.rollup(ev, "1m", hs), "1h", hs)
     sk = h1h.select(
         "conv_id", "bucket_ts", "metric",
         rollup.hist_quantile(0.5, _HB).alias("p50"),
@@ -3311,12 +3315,12 @@ FROM r GROUP BY 1, 2, 3
 
 @q("ts_ohlc_1h", _OHLC_SQL.format(unit="hour"))
 def ts_ohlc_1h(spark, sf_dir):
-    """Hourly OHLC candles (`rollup.ohlc`): open/close via min_by/max_by
+    """Hourly OHLC candles (`rollup.candles`): open/close via min_by/max_by
     over the (ts, event_id) struct — deterministic argmin/argmax with NO
     window sort, one map-side-combined shuffle. The oracle takes the
     row_number road to the same four values."""
     ev = _events_long(spark, sf_dir)
-    out = rollup.ohlc(ev, tier="1h")
+    out = rollup.rollup(ev, "1h", rollup.candles())
     return out.select(
         "conv_id", "metric", "bucket_ts", "open", "high", "low", "close",
         F.col("cnt").cast("long").alias("cnt"),
@@ -3325,13 +3329,15 @@ def ts_ohlc_1h(spark, sf_dir):
 
 @q("ts_ohlc_1d_cascade", _OHLC_SQL.format(unit="day"))
 def ts_ohlc_1d_cascade(spark, sf_dir):
-    """Daily candles CASCADED from hourly ones (`rollup.cascade_ohlc`) —
+    """Daily candles CASCADED from hourly ones (`rollup.cascade` of
+    `rollup.candles`) —
     open of the earliest sub-bucket / close of the latest / min-max merge
     — checked against the oracle computing daily candles DIRECTLY from
     raw events: merge ≡ rebuild, the same reaggregability proof the
     cnt/sum tier cascade entries make."""
     ev = _events_long(spark, sf_dir)
-    out = rollup.cascade_ohlc(rollup.ohlc(ev, tier="1h"), "1d")
+    cs = rollup.candles()
+    out = rollup.cascade(rollup.rollup(ev, "1h", cs), "1d", cs)
     return out.select(
         "conv_id", "metric", "bucket_ts", "open", "high", "low", "close",
         F.col("cnt").cast("long").alias("cnt"),
@@ -4168,8 +4174,8 @@ def ts_m4_downsample(spark, sf_dir):
     reaggregable groupBy with struct-min/max tie pinning (first/min
     break earliest, last/max break latest; the oracle mirrors with
     explicit rank windows). Map-side partial agg absorbs raw volume;
-    cascades via `rolling.m4_cascade`. Null handling lives inside
-    `m4_rollup` (one contract, not per-caller filters)."""
+    cascades via `rollup.cascade` of `rollup.m4`. Null handling lives in
+    that spec (one contract, not per-caller filters)."""
     return rolling.m4_downsample(_events_long(spark, sf_dir), bucket="hour")
 
 
@@ -4243,11 +4249,11 @@ def ts_seasonal_backtest(spark, sf_dir):
     every hourly bucket with the bucket 24 h earlier and score MAE /
     RMSE / sMAPE per series — the zero-parameter forecasting baseline
     and the "daily rhythm broke" alarm. Runs THROUGH the engine's 1h
-    tier (`rollup.rollup_from_raw`), hourly means pinned at round-6 on
+    tier (`rollup.rollup` of `rollup.stats`), hourly means pinned at round-6 on
     both engines before scoring so every error term is bit-identical;
     the self-join and scoring groupBy share the tier's partitioning."""
     ev = _events_long(spark, sf_dir)
-    hourly = rollup.rollup_from_raw(ev, "1h").select(
+    hourly = rollup.rollup(ev, "1h", rollup.stats()).select(
         "conv_id",
         "metric",
         "bucket_ts",
@@ -4374,7 +4380,7 @@ def ts_theil_sen(spark, sf_dir):
     shuffle of the tiny tier, never an all-pairs plan on raw. Exact
     percentile(0.5) ≙ DuckDB median (both average middles)."""
     ev = _events_long(spark, sf_dir)
-    hourly = rollup.rollup_from_raw(ev, "1h").select(
+    hourly = rollup.rollup(ev, "1h", rollup.stats()).select(
         "conv_id",
         "metric",
         F.date_trunc("day", F.col("bucket_ts")).alias("day"),
@@ -4581,8 +4587,9 @@ def ts_tier_merge_late(spark, sf_dir):
     raw)."""
     ev = _events_long(spark, sf_dir)
     cutoff = F.lit("2024-01-25 00:00:00").cast("timestamp")
-    on_time = rollup.rollup_from_raw(ev.where(F.col("ts") < cutoff), "1m")
-    late = rollup.rollup_from_raw(ev.where(F.col("ts") >= cutoff), "1m")
+    st = rollup.stats()
+    on_time = rollup.rollup(ev.where(F.col("ts") < cutoff), "1m", st)
+    late = rollup.rollup(ev.where(F.col("ts") >= cutoff), "1m", st)
     return _tier_out(rollup.merge_tiers(on_time, late))
 
 

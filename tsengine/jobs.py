@@ -96,7 +96,7 @@ def _tier_stage(spark, feats, units, *, out_root, paths) -> dict:
     # re-aggregate the wide scratch, so no shuffle in the whole cascade
     # carries a string metric key. Public long tiers are post-agg unpivots
     # of the scratch; a wide row publishes one long row per metric with data.
-    g1m = rollup.rollup_from_raw_wide_stats(feats, mets, "1m", by=("unit",))
+    g1m = rollup.rollup(feats, "1m", rollup.stats(mets), on=("unit", "conv_id"))
     n_long = sum((F.col(f"{m}__cnt") > 0).cast("long") for m in mets)
     rows = _write_units(g1m, paths["1m_wide"], units, weight=n_long)
     live = [k for k in units if rows[k]]

@@ -31,6 +31,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from tsengine import rollup
+
 US = 1_000_000
 
 
@@ -114,89 +116,6 @@ def ltob_downsample(
     )
 
 
-def m4_rollup(
-    df: DataFrame,
-    bucket: str = "hour",
-    on: tuple[str, ...] = ("conv_id", "metric"),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str | None = "event_id",
-) -> DataFrame:
-    """Mergeable M4 state: per (series, bucket) the four argmin/argmax
-    STRUCTS (first/last/min/max, each carrying its attaining (t, k) key)
-    plus the row count. Structs are what make the sketch reaggregable —
-    lexicographic min/max over (value|t, t|k) is associative, so
-    ``m4_cascade`` merges coarser tiers without re-reading raw (merge ≡
-    rebuild, tested). ``m4_finalize`` projects the chart-facing values
-    AND the attaining timestamps.
-
-    Relation to ``rollup.ohlc``: the VALUE algebra is the candle merge
-    algebra (open/high/low/close ≡ first/max/min/last). What makes M4 a
-    distinct operator is the attaining-coordinate state: a line-chart
-    renderer needs the x-coordinates of the extrema (Jugel et al.'s
-    error-free pixel guarantee is about (t, v) pairs), which candles
-    discard by construction.
-
-    Tie semantics pinned by the struct field order: first/last break on
-    (t, tiebreak) earliest/latest; min breaks to the EARLIEST attaining
-    row, max to the LATEST — exact integer/double comparisons, no ulp
-    ambiguity."""
-    # drop null values here (same contract as rollup_from_raw): a struct
-    # with a null field still compares in min/max, which would let a null
-    # value win an argmin — the one semantics no chart consumer wants
-    df = df.where(F.col(value_col).isNotNull())
-    return (
-        df.groupBy(*on, F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"))
-        .agg(*m4_agg_exprs(ts_col, value_col, tiebreak))
-    )
-
-
-def m4_agg_exprs(
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak: str | None = "event_id",
-) -> list:
-    """The M4 component set shared by the batch rollup and the streaming
-    windowed aggregation (one definition of the sketch, like
-    ``streaming.tier_agg_exprs``). ``tiebreak=None`` for streams whose
-    timestamps are unique per series (same convention as
-    ``rollup.ohlc``'s ``seq_col=None``)."""
-    tsu = _us(F.col(ts_col))
-    tie = [F.col(tiebreak).alias("k")] if tiebreak is not None else []
-    first_s = F.min(F.struct(tsu.alias("t"), *tie,
-                             F.col(value_col).alias("v")))
-    last_s = F.max(F.struct(tsu.alias("t"), *tie,
-                            F.col(value_col).alias("v")))
-    min_s = F.min(F.struct(F.col(value_col).alias("v"), tsu.alias("t"), *tie))
-    max_s = F.max(F.struct(F.col(value_col).alias("v"), tsu.alias("t"), *tie))
-    return [
-        F.count(value_col).alias("cnt"),
-        first_s.alias("m4_first"),
-        last_s.alias("m4_last"),
-        min_s.alias("m4_min"),
-        max_s.alias("m4_max"),
-    ]
-
-
-def m4_cascade(
-    m4: DataFrame,
-    to_bucket: str = "day",
-    on: tuple[str, ...] = ("conv_id", "metric"),
-) -> DataFrame:
-    """Coarser M4 tier FROM a finer one — struct min/max merge, never a
-    raw re-read. Same output schema as ``m4_rollup`` at ``to_bucket``."""
-    return (
-        m4.groupBy(*on, F.date_trunc(to_bucket, F.col("bucket_ts")).alias("bucket_ts"))
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("m4_first").alias("m4_first"),
-            F.max("m4_last").alias("m4_last"),
-            F.min("m4_min").alias("m4_min"),
-            F.max("m4_max").alias("m4_max"),
-        )
-    )
-
-
 def m4_finalize(m4: DataFrame) -> DataFrame:
     """Chart-facing projection of the M4 state: the four (t, v) points —
     values plus their attaining integer-µs timestamps (the x-coordinates
@@ -229,16 +148,15 @@ def m4_downsample(
     chart — first, last, min, max values — the width-bound alternative
     to `ltob_downsample` when the consumer is a pixel-column renderer
     rather than a point-budget one. One row per (series, bucket); see
-    ``m4_rollup`` for the pinned tie semantics.
+    ``rollup.m4`` for the pinned tie semantics.
 
     Scale: ONE shuffle keyed by (series, bucket) with map-side partial
     min/max struct combine — the same reaggregable shape as the tier
-    rollups; ``m4_cascade`` re-aggregates 1m→1h→1d with merge ≡ rebuild
-    guaranteed by struct-order associativity."""
-    return m4_finalize(
-        m4_rollup(df, bucket=bucket, on=on, ts_col=ts_col,
-                  value_col=value_col, tiebreak=tiebreak)
-    )
+    rollups; ``rollup.cascade`` with ``rollup.m4`` re-aggregates
+    1m→1h→1d with merge ≡ rebuild guaranteed by struct-order
+    associativity."""
+    syn = rollup.m4(tiebreak, value_col)
+    return m4_finalize(rollup.rollup(df, bucket, syn, on=on, ts_col=ts_col))
 
 
 def staleness(

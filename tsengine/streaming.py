@@ -15,8 +15,8 @@ Design:
 - sink = foreachBatch parquet append partitioned by bucket date; on a real
   deployment this is an Iceberg MERGE (idempotent on restart via the
   streaming checkpoint + deterministic window keys).
-- the same ``tier_agg_exprs`` drive batch and streaming — one definition of
-  tier semantics.
+- the same ``rollup`` synopsis specs (``rollup.stats``, ``rollup.m4``)
+  drive batch and streaming — one definition of tier semantics.
 """
 
 from __future__ import annotations
@@ -25,19 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from tsengine import features
+from tsengine import features, rollup
 from tsengine.schema import TRANSCRIPTS
-
-
-def tier_agg_exprs() -> list:
-    """The reaggregable component set shared by rollup.py and streaming."""
-    return [
-        F.count("value").alias("cnt"),
-        F.sum("value").alias("sum"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.sum(F.col("value") * F.col("value")).alias("sumsq"),
-    ]
 
 
 def read_transcript_stream(
@@ -78,23 +67,19 @@ def streaming_tier_1m(
 def streaming_tier_long(long: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """(conv_id, ts, metric, value) stream → windowed 1m tier updates —
     the windowed-agg stage shared by every long-format source (transcript
-    signals, event streams). Same component set as the batch tier, so a
-    stream drained with ``trigger(availableNow=True)`` is row-identical to
-    ``rollup.rollup_from_raw`` on the same input (oracle-checked by the
+    signals, event streams). Same ``rollup.stats`` spec as the batch tier
+    (null values dropped, then its build aggregates), so a stream drained
+    with ``trigger(availableNow=True)`` is row-identical to
+    ``rollup.rollup`` on the same input (oracle-checked by the
     ``ts_streaming_tier`` entry)."""
+    syn = rollup.stats()
     return (
-        long.withWatermark("ts", watermark)
+        syn.rows(long)
+        .withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", "1 minute").alias("w"), "metric")
-        .agg(*tier_agg_exprs())
+        .agg(*syn.build("ts"))
         .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_ts"),
-            "metric",
-            "cnt",
-            "sum",
-            "min",
-            "max",
-            "sumsq",
+            "conv_id", F.col("w.start").alias("bucket_ts"), "metric", *rollup.STAT_COLS
         )
     )
 
@@ -118,11 +103,12 @@ def streaming_m4(
     batch side does."""
     from tsengine import rolling
 
+    syn = rollup.m4(tiebreak)
     agg = (
-        long.where(F.col("value").isNotNull())
+        syn.rows(long)
         .withWatermark("ts", watermark)
         .groupBy("conv_id", F.window("ts", window).alias("w"), "metric")
-        .agg(*rolling.m4_agg_exprs("ts", "value", tiebreak))
+        .agg(*syn.build("ts"))
         .withColumn("bucket_ts", F.col("w.start"))
         .drop("w")
     )

@@ -77,7 +77,7 @@ def tier_consistency_violations(
     mismatching (conv_id, bucket_ts, metric) rows."""
     from tsengine import rollup
 
-    re = rollup.cascade(finer, to_tier).select(
+    re = rollup.cascade(finer, to_tier, rollup.stats()).select(
         "conv_id", "bucket_ts", "metric",
         F.col("cnt").alias("r_cnt"), F.col("sum").alias("r_sum"),
         F.col("min").alias("r_min"), F.col("max").alias("r_max"),
