@@ -1,14 +1,16 @@
 """run_pipeline runs each stage as one Spark job per table over all of its
-pending units: the job count does not grow with the bucket count, and a
-pending unit that yields no rows is cleared rather than left stale."""
+pending units: the job count does not grow with the bucket count, a
+pending unit that yields no rows is cleared rather than left stale, and
+only the published tables are stored."""
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pytest
 
-from tsengine import jobs
+from tsengine import chunks, features, gapfill, jobs
 from tsengine.lineage import LineageLog
 from tsengine.synth import generate_transcripts
 
@@ -62,9 +64,7 @@ def test_unit_without_rows_is_cleared(spark, small, tmp_path):
     rest = small.where(jobs.bucket_expr(4) != k)
     jobs.run_pipeline(spark, rest, out, n_buckets=4, fingerprint="fpB")
 
-    tables = ("tier_1m_wide", "tier_1h_wide", "tier_1m", "tier_1h", "tier_1d",
-              "filled_1m", "chunks")
-    for t in tables:
+    for t in ("tier_1m", "tier_1h", "tier_1d", "chunks"):
         got = spark.read.parquet(f"{out}/{t}")
         assert got.where(f"unit = {k}").count() == 0, t
         assert got.where(f"unit != {k}").count() > 0, t
@@ -75,3 +75,24 @@ def test_unit_without_rows_is_cleared(spark, small, tmp_path):
             f"bucket={i}" for i in range(4)}
     m = log.metrics().where(f"input_fingerprint = 'fpB' AND unit = 'bucket={k}'")
     assert sorted(r["rows_out"] for r in m.collect()) == [0, 0]
+
+
+def test_stores_only_published_tables(spark, small, tmp_path):
+    """The output root holds the four published tables and the lineage
+    log, nothing else; the chunk table decodes to exactly the gap-filled
+    1m grid of the transcripts' features, the grid no stored table holds."""
+    out = str(tmp_path / "pipe")
+    jobs.run_pipeline(spark, small, out)
+    assert set(os.listdir(out)) == {"tier_1m", "tier_1h", "tier_1d", "chunks", "_lineage"}
+
+    cols = ["conv_id", "metric", "bucket_ts", "value"]
+
+    def canon(df):
+        return df.select(*cols).toPandas().sort_values(cols[:3]).reset_index(drop=True)
+
+    got = canon(chunks.decode_chunks(spark.read.parquet(f"{out}/chunks")))
+    grid = gapfill.gapfill_sql(features.to_long(
+        features.derive_features_chunked(small), jobs.GAPFILL_METRICS))
+    want = canon(grid)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want, check_exact=True)

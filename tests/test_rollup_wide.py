@@ -89,32 +89,28 @@ def test_unpivot_stats_roundtrips_wide_rollup(spark):
 
 
 def test_publish_cascade_wide_matches_sequential(transcripts, spark, tmp_path):
-    """publish_cascade_wide (threaded, overlapped writes, unit-partitioned
-    layout of jobs.run_pipeline) must produce tier tables identical to the
-    sequential unpivot/cascade chain — overlap is a scheduling change, not
-    a semantics change."""
+    """publish_cascade_wide (unit-partitioned layout of jobs.run_pipeline)
+    must produce tier tables identical to the sequential unpivot/cascade
+    chain, and store no wide table."""
     mets = features.DEFAULT_METRICS
     wst, on, by = rollup.stats(mets), ("unit", "conv_id"), ("unit",)
     out = str(tmp_path / "tiers")
     wide = features.derive_features_chunked(transcripts).withColumn(
         "unit", jobs.bucket_expr(4))
     g1m = rollup.rollup(wide, "1m", wst, on=on)
-    g1m.write.mode("overwrite").partitionBy("unit").parquet(f"{out}/tier_1m_wide")
-    rollup.publish_cascade_wide(spark, out, mets, units=[0, 1, 2, 3])
+    rollup.publish_cascade_wide(g1m, out, mets)
 
-    g1m_r = spark.read.parquet(f"{out}/tier_1m_wide")
-    g1h_r = rollup.cascade(g1m_r, "1h", wst, on=on)
+    g1h = rollup.cascade(g1m, "1h", wst, on=on)
     seq = {
-        "1m": rollup.unpivot_stats(g1m_r, mets, by),
-        "1h": rollup.unpivot_stats(g1h_r, mets, by),
-        "1d": rollup.unpivot_stats(rollup.cascade(g1h_r, "1d", wst, on=on), mets, by),
+        "1h": rollup.unpivot_stats(g1h, mets, by),
+        "1d": rollup.unpivot_stats(rollup.cascade(g1h, "1d", wst, on=on), mets, by),
     }
     for tier, want in seq.items():
-        got = _canon(spark.read.parquet(f"{out}/tier_{tier}"))
+        # partition discovery reads the unit column back as int
+        got = _canon(spark.read.parquet(f"{out}/tier_{tier}")).astype({"unit": "int64"})
         pd.testing.assert_frame_equal(got, _canon(want), rtol=1e-12)
-    # every table is partitioned by unit; the intermediate wide scratch for
-    # 1h is written, 1d publishes directly
-    for table in ("tier_1m", "tier_1h_wide", "tier_1h", "tier_1d"):
+    # every table is partitioned by unit; no wide form is stored
+    assert sorted(os.listdir(out)) == ["tier_1d", "tier_1h"]
+    for table in ("tier_1h", "tier_1d"):
         parts = {d for d in os.listdir(f"{out}/{table}") if d.startswith("unit=")}
         assert parts == {f"unit={k}" for k in range(4)}
-    assert not os.path.exists(f"{out}/tier_1d_wide")

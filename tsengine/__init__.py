@@ -17,7 +17,7 @@ curves    — broadcast piecewise-linear curve lookup (np.interp semantics, J3)
 gapfill   — regular-grid gap fill: linear / forward-fill + trailing pad (W1/W2)
 rollup    — cascading continuous aggregates 1m→1h→1d, reaggregable stats (A6)
 indicators— per-series indicator battery (A1/A2/A7)
-codec     — Gorilla XOR float + delta-of-delta timestamp compression
+codec     — dodblk/xorblk block codecs: delta-of-delta timestamps, XOR floats
 chunks    — chunk blob encode/decode as grouped-map UDFs, salt-aware (skew)
 lineage   — per-partition lineage + metrics rows; checkpoint/resume
 textops   — dedup (exact/minhash/simhash/ngram), lang-id, quality, tokens

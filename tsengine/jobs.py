@@ -5,14 +5,19 @@ The flagship job reproduces the reference's E1/E3 lifecycle shape
 
     scan transcripts
       → per-turn signal pack (features.py, pure Column exprs)
-      → long format
-      → 1m wide-stats tier (ONE shuffle over raw, map-side partial agg,
+      → 1m wide-stats rollup (ONE shuffle over raw, map-side partial agg,
         one row per (conv, minute) carrying all metrics — never per-metric)
       → 1h wide (from 1m wide) → 1d wide (from 1h wide)   # cascade, never raw
-      → public long tiers = post-agg unpivots of the wide scratch
-      → gap-filled 1m grid (gapfill.py, Catalyst path)
-      → chunk blobs (chunks.py: delta-of-delta + Gorilla-XOR)
+      → tier_1m / tier_1h / tier_1d = long unpivots of the in-memory
+        wide frames
+      → long format → gap-filled 1m grid (gapfill.py, Catalyst path)
+      → chunk blobs (chunks.py + codec.py: ``dodblk`` delta-of-delta
+        timestamps, ``xorblk`` XOR-coded values), encoded straight from
+        the grid in the same job that writes them
     with per-unit lineage rows → resumable (lineage.py)
+
+Only the published tables are stored: ``tier_1m``, ``tier_1h``,
+``tier_1d``, ``chunks`` and the ``_lineage`` log.
 
 Work units are conv_id hash buckets (≙ Iceberg ``bucket(B, conv_id)``
 partitions), and every sink is partitioned by unit (``<table>/unit=k/``).
@@ -52,21 +57,15 @@ def _unit_name(k: int) -> str:
     return f"bucket={k}"
 
 
-def _write_units(
-    df: DataFrame, path: str, units: list[int], weight=None
-) -> dict[int, int]:
+def _write_units(df: DataFrame, path: str, units: list[int]) -> dict[int, int]:
     """Write ``df`` partitioned by its ``unit`` column, replacing only the
     ``unit=k`` directories it writes rows to (dynamic partition
-    overwrite), and return Σ``weight`` (default: rows) per unit of
-    ``units``, observed during the write instead of re-read after it."""
-    weight = F.lit(1) if weight is None else weight
+    overwrite), and return the row count per unit of ``units``, observed
+    during the write instead of re-read after it."""
     obs = Observation()
     df.observe(
         obs,
-        *[
-            F.sum(F.when(F.col("unit") == k, weight).otherwise(0)).alias(f"u{k}")
-            for k in units
-        ],
+        *[F.sum((F.col("unit") == k).cast("long")).alias(f"u{k}") for k in units],
     ).write.mode("overwrite").partitionBy("unit").option(
         "partitionOverwriteMode", "dynamic"
     ).parquet(path)
@@ -87,50 +86,42 @@ def _counts(rows: dict[int, int]) -> dict[str, tuple[None, int]]:
     return {_unit_name(k): (None, n) for k, n in rows.items()}
 
 
-def _tier_stage(spark, feats, units, *, out_root, paths) -> dict:
-    """1m wide rollup of every unit in one write, then the publish cascade;
-    rows_out per unit is its long tier_1m row count."""
+def _tier_stage(feats, units, *, out_root, paths) -> dict:
+    """1m wide rollup of every unit, published as ``tier_1m`` in one write
+    and cascaded to ``tier_1h`` and ``tier_1d``; rows_out per unit is its
+    ``tier_1m`` row count."""
     mets = features.DEFAULT_METRICS
     # wide-path rollup AND cascade: the only raw-volume shuffle carries one
     # row per (conv, minute) — not per metric — and the coarser tiers
-    # re-aggregate the wide scratch, so no shuffle in the whole cascade
-    # carries a string metric key. Public long tiers are post-agg unpivots
-    # of the scratch; a wide row publishes one long row per metric with data.
-    g1m = rollup.rollup(feats, "1m", rollup.stats(mets), on=("unit", "conv_id"))
-    n_long = sum((F.col(f"{m}__cnt") > 0).cast("long") for m in mets)
-    rows = _write_units(g1m, paths["1m_wide"], units, weight=n_long)
-    live = [k for k in units if rows[k]]
-    _drop_units(
-        [paths[t] for t in ("1m_wide", "1h_wide", *rollup.TIER_ORDER)],
-        [k for k in units if not rows[k]],
-    )
-    if live:
-        # overlapped publish: each tier's long-form unpivot write runs
-        # concurrently with the next cascade level — the coarse-tier tail
-        # is two overlap groups, not five sequential small jobs
-        rollup.publish_cascade_wide(spark, out_root, mets, units=live)
+    # re-aggregate the wide frame, so no shuffle in the whole cascade
+    # carries a string metric key. The public long tiers are post-agg
+    # unpivots; the wide frame is persisted for the 1m write and the
+    # cascade that follows it, and never stored.
+    g1m = rollup.rollup(feats, "1m", rollup.stats(mets), on=("unit", "conv_id")).persist()
+    try:
+        rows = _write_units(
+            rollup.unpivot_stats(g1m, mets, ("unit",)), paths["1m"], units
+        )
+        _drop_units(
+            [paths[t] for t in rollup.TIER_ORDER], [k for k in units if not rows[k]]
+        )
+        if any(rows.values()):
+            rollup.publish_cascade_wide(g1m, out_root, mets)
+    finally:
+        g1m.unpersist()
     return _counts(rows)
 
 
-def _chunk_stage(
-    spark, feats, units, *, paths, n_buckets, gapfill_freq, chunk_span
-) -> dict:
-    """Gap-filled 1m grid and its chunk blobs for every unit, one write
-    each; rows_out per unit is its chunk row count."""
+def _chunk_stage(feats, units, *, paths, n_buckets, gapfill_freq, chunk_span) -> dict:
+    """Gap-filled 1m grid of every unit, encoded to chunk blobs and written
+    in one job; rows_out per unit is its chunk row count."""
     long = features.to_long(feats, GAPFILL_METRICS)
     filled = gapfill.gapfill_sql(long, freq=gapfill_freq, method="linear")
-    n_filled = _write_units(
-        filled.withColumn("unit", bucket_expr(n_buckets)), paths["filled"], units
+    ch = chunks_mod.encode_chunks(filled, chunk_span=chunk_span)
+    rows = _write_units(
+        ch.withColumn("unit", bucket_expr(n_buckets)), paths["chunks"], units
     )
-    live = [k for k in units if n_filled[k]]
-    _drop_units([paths["filled"], paths["chunks"]], [k for k in units if not n_filled[k]])
-    rows = dict.fromkeys(units, 0)
-    if live:
-        filled_r = spark.read.parquet(paths["filled"]).where(F.col("unit").isin(live))
-        ch = chunks_mod.encode_chunks(filled_r, chunk_span=chunk_span)
-        rows |= _write_units(
-            ch.withColumn("unit", bucket_expr(n_buckets)), paths["chunks"], live
-        )
+    _drop_units([paths["chunks"]], [k for k in units if not rows[k]])
     return _counts(rows)
 
 
@@ -147,7 +138,10 @@ def run_pipeline(
     resume: bool = True,
     fail_after_units: int | None = None,
 ) -> dict[str, str]:
-    """Run (or resume) the full pipeline; returns output table paths.
+    """Run (or resume) the full pipeline. Returns the paths of the tables
+    it publishes under ``out_root``, keyed ``"1m"``, ``"1h"``, ``"1d"``
+    (``tier_1m``, ``tier_1h``, ``tier_1d``) and ``"chunks"``; the
+    lineage log is ``{out_root}/_lineage``.
 
     ``fail_after_units`` injects a failure for resume tests: the stages
     (tier_cascade, then chunks) run only their first pending units until
@@ -155,14 +149,9 @@ def run_pipeline(
     log = lineage.LineageLog(spark, out_root)
     paths = {
         t: os.path.join(out_root, f"tier_{t}") for t in rollup.TIER_ORDER
-    } | {
-        "1m_wide": os.path.join(out_root, "tier_1m_wide"),
-        "1h_wide": os.path.join(out_root, "tier_1h_wide"),
-        "chunks": os.path.join(out_root, "chunks"),
-        "filled": os.path.join(out_root, "filled_1m"),
-    }
+    } | {"chunks": os.path.join(out_root, "chunks")}
 
-    # stage -> work(spark, feats, units), run in this order
+    # stage -> work(feats, units), run in this order
     stages = {
         "tier_cascade": partial(_tier_stage, out_root=out_root, paths=paths),
         "chunks": partial(
@@ -204,7 +193,7 @@ def run_pipeline(
                 part = feats if units == wanted else feats.where(F.col("unit").isin(units))
                 lineage.run_unit(
                     log, job_id, stage, [_unit_name(k) for k in units], fingerprint,
-                    partial(work, spark, part, units),
+                    partial(work, part, units),
                 )
         finally:
             if shared:

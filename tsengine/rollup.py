@@ -349,65 +349,28 @@ def unpivot_stats(
     ).where(F.col("cnt") > 0)
 
 
-def publish_cascade_wide(
-    spark,
-    out_root: str,
-    metrics: list[str],
-    units: list[int],
-    tiers: list[str] | None = None,
-) -> None:
-    """Publish the public long-form tier tables from an already-written
-    wide-stats finest tier (``{out_root}/tier_{tiers[0]}_wide``) in the
-    unit-partitioned layout of ``jobs.run_pipeline``: every table is
-    partitioned by an integer ``unit`` column, only ``units`` are read,
-    ``unit`` is carried as a group-by key, and each write replaces exactly
-    the ``unit=<k>`` directories it produces rows for (dynamic partition
-    overwrite), so all units of a stage publish in one job per table.
-
-    Writes OVERLAP: at each level, tier T's unpivot publish and tier T+1's
-    wide cascade both read the same materialized scratch and share no
-    lineage, so they are submitted from two driver threads and the
-    scheduler backfills idle task slots between their stages. On a
-    multi-executor cluster this keeps executors busy through the small
-    coarse-tier jobs (each tier is ≥60× smaller than the last — a single
-    sequential tail of small jobs leaves most of the cluster idle); in
-    local[N] runs it removes ~half the post-rollup serial tail. Output
-    tables are identical to the sequential chain (verified in
-    tests/test_rollup_wide.py)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    tiers = list(tiers or TIER_ORDER)
+def publish_cascade_wide(g1m: DataFrame, out_root: str, metrics: list[str]) -> None:
+    """Publish the coarser long-form tier tables (``tier_1h``, ``tier_1d``)
+    of ``jobs.run_pipeline`` from its wide-stats 1m frame ``g1m``, keyed
+    by (``unit``, ``conv_id``, ``bucket_ts``): 1m cascades to 1h and 1h
+    to 1d in wide form, and each tier is written as its ``unpivot_stats``
+    view, partitioned by ``unit``. Each write replaces exactly the
+    ``unit=<k>`` directories it produces rows for (dynamic partition
+    overwrite). The wide 1h frame feeds both the 1h write and the 1d
+    cascade, so it is persisted between them; no wide form is stored."""
     syn, on = stats(metrics), ("unit", "conv_id")
 
     def _write(df: DataFrame, table: str) -> None:
-        df.write.mode("overwrite").partitionBy("unit").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(f"{out_root}/{table}")
+        unpivot_stats(df, metrics, ("unit",)).write.mode("overwrite").partitionBy(
+            "unit"
+        ).option("partitionOverwriteMode", "dynamic").parquet(f"{out_root}/{table}")
 
-    def _submit(ex, df: DataFrame, table: str):
-        # inheritable: the write job keeps the caller's job group,
-        # description and tags, so a run's jobs stay attributable to it
-        return ex.submit(inheritable_thread_target(spark)(_write), df, table)
-
-    for i in range(1, len(tiers)):
-        g = spark.read.parquet(f"{out_root}/tier_{tiers[i - 1]}_wide").where(
-            F.col("unit").isin(units)
-        )
-        nxt = cascade(g, tiers[i], syn, on=on)
-        with ThreadPoolExecutor(2) as ex:
-            fin = _submit(ex, unpivot_stats(g, metrics, ("unit",)), f"tier_{tiers[i - 1]}")
-            if i == len(tiers) - 1:
-                # last level: no coarser cascade will re-read it, so skip
-                # the wide scratch and publish the long form directly
-                nxt_f = _submit(
-                    ex, unpivot_stats(nxt, metrics, ("unit",)), f"tier_{tiers[i]}"
-                )
-            else:
-                nxt_f = _submit(ex, nxt, f"tier_{tiers[i]}_wide")
-            fin.result()
-            nxt_f.result()
+    g1h = cascade(g1m, "1h", syn, on=on).persist()
+    try:
+        _write(g1h, "tier_1h")
+        _write(cascade(g1h, "1d", syn, on=on), "tier_1d")
+    finally:
+        g1h.unpersist()
 
 
 def finalize(tier_df: DataFrame) -> DataFrame:
