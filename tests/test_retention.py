@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from tsengine import retention, tables
@@ -70,3 +71,18 @@ def test_filter_retained_prunes_partitions(spark, tmp_path):
     p = buf.getvalue()
     # the pday predicate must reach partition pruning, not a post-scan filter
     assert "PartitionFilters" in p and "pday" in p.split("PartitionFilters", 1)[1][:200]
+
+
+def test_apply_retention_rejects_root_without_day_partitions(spark, tmp_path):
+    """A ``unit=k/`` root (``run_pipeline``'s layout) has no day
+    directories to drop: retention raises instead of keeping every row."""
+    root = str(tmp_path / "tier_1m")
+    _fact(spark).withColumn("unit", F.lit(0)).write.partitionBy("unit").parquet(root)
+    cutoff = datetime(2024, 3, 5)
+    with pytest.raises(ValueError, match="pday="):
+        retention.apply_retention(root, cutoff)
+    with pytest.raises(ValueError, match="pday="):
+        retention.apply_policy({"1m": root}, cutoff + timedelta(days=30))
+    assert spark.read.parquet(root).count() == 20
+    # a root with nothing written yet has nothing to expire
+    assert retention.apply_retention(str(tmp_path / "empty"), cutoff)["n_dropped"] == 0

@@ -1,14 +1,19 @@
 """Driver heap sizing: the default heap fits the machine's memory, is
-capped at 48g, and yields to ``$TSENGINE_DRIVER_MEM``."""
+capped at 48g, and yields to ``$TSENGINE_DRIVER_MEM``. Zip importers that
+re-read an archive only when it changed, in the driver and in the workers."""
 
 from __future__ import annotations
 
 import builtins
+import importlib
 import io
+import sys
+import zipfile
+import zipimport
 
 import pytest
 
-from tsengine import session
+from tsengine import env_tuning, session
 
 GIB = 1024**3
 
@@ -71,3 +76,96 @@ def test_session_jvm_launched_with_resolved_heap(spark):
     args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
     xmx = [a for a in args if a.startswith("-Xmx")]
     assert xmx == [f"-Xmx{session.driver_memory()}"], args
+
+
+zip_rereads_eager = pytest.mark.skipif(
+    sys.version_info >= (3, 12),
+    reason="Python 3.12+ defers the zip re-read to the next lookup",
+)
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@zip_rereads_eager
+def test_stable_zip_importer_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"tsz_first": "X = 1\n"})
+    reads = []
+    real_read = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda p: reads.append(p) or real_read(p)
+    )
+    # control: the stock importer re-reads an unchanged archive
+    stock = zipimport.zipimporter(archive)
+    reads.clear()
+    stock.invalidate_caches()
+    assert reads == [archive]
+
+    assert env_tuning.stabilize_zip_imports()  # idempotent: import installed it
+    monkeypatch.syspath_prepend(archive)
+    try:
+        import tsz_first
+
+        assert tsz_first.X == 1
+        assert type(sys.path_importer_cache[archive]) is env_tuning._StableZipImporter
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == []
+
+        _write_zip(archive, {"tsz_first": "X = 1\n", "tsz_second": "Y = 2\n"})
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        import tsz_second
+
+        assert tsz_second.Y == 2
+        importlib.invalidate_caches()
+        assert reads == [archive]
+    finally:
+        for name in ("tsz_first", "tsz_second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+@zip_rereads_eager
+def test_spark_workers_reread_no_unchanged_archive(spark):
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        # importing the package is what unpickling an engine UDF does
+        from tsengine import env_tuning
+
+        zips = [
+            v for v in sys.path_importer_cache.values()
+            if isinstance(v, zipimport.zipimporter)
+        ]
+        reads = []
+        real_read = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or real_read(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real_read
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "n_zip": [len(zips)],
+            "n_stable": [sum(type(v) is env_tuning._StableZipImporter for v in zips)],
+            "n_reads": [len(reads)],
+        })
+
+    got = spark.range(0, 4, 1, 4).mapInPandas(
+        probe, "n_zip long, n_stable long, n_reads long"
+    ).toPandas()
+    assert len(got) == 4
+    # pyspark.zip and the py4j zip are on every worker's path
+    assert (got.n_zip > 0).all(), got
+    assert (got.n_stable == got.n_zip).all(), got
+    assert (got.n_reads == 0).all(), got

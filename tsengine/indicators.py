@@ -133,20 +133,6 @@ def mix_entropy(
     )
 
 
-def duration_curve(
-    df: DataFrame, key: str = "conv_id", value: str = "value", ts: str = "ts"
-) -> DataFrame:
-    """Duration-curve sort (W5, `examples/helper_functions.py:88-129`):
-    values ranked descending per key, original timestamps carried as
-    payload. Ties broken by ts for determinism (the reference relies on
-    argsort stability; an explicit tiebreak is the distributed-safe
-    equivalent)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(key).orderBy(F.col(value).desc(), F.col(ts))
-    return df.select(key, ts, value).withColumn("rank", F.row_number().over(w))
-
-
 # shared by the Spark side and the DuckDB oracle (entry `ts_moments`):
 # identical text ⇒ identical association order ⇒ doubles agree to ulp,
 # which the 5/6-dp rounding then makes bitwise-equal cross-engine.

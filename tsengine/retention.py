@@ -63,8 +63,19 @@ def expired_day_dirs(root: str, cutoff) -> list[Path]:
 
 def apply_retention(root: str, cutoff, dry_run: bool = False) -> dict:
     """Drop expired day partitions under ``root``. Returns
-    {dropped: [...], n_dropped: int}. ``dry_run`` only reports."""
+    {dropped: [...], n_dropped: int}. ``dry_run`` only reports.
+
+    Raises ValueError on a root that holds parquet files but no ``pday=``
+    directory (e.g. ``run_pipeline``'s ``unit=k/`` tables): expiry drops
+    whole day partitions, so such a table would silently keep every row."""
     dirs = expired_day_dirs(root, cutoff)
+    if not dirs and not any(Path(root).glob("**/pday=*")) and any(
+        Path(root).glob("**/*.parquet")
+    ):
+        raise ValueError(
+            f"{root} holds parquet files but no pday= partition directory; "
+            "retention needs the day-partitioned layout of tables.write_fact"
+        )
     if not dry_run:
         for d in dirs:
             shutil.rmtree(d)
